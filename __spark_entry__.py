@@ -6,11 +6,20 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Queries live in ``etl_with_s3__dynamodb_and_glue_spark/plans/``; this
-module only merges the per-module registries.
+module only merges the per-module registries. The driver checks the
+first 50 queries per round, so ``queries()`` is ordered from the
+``CORRECTNESS_r*.json`` artifacts next to this module: ``user_sessions``
+first, then never-checked queries, then the rest by the round that last
+checked them, oldest first (ties keep module order).
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,331 +44,24 @@ _MODULES = [
     retrieval,
 ]
 
-# The driver's correctness harness checks the FIRST 50 registry entries
-# per round; the registry is larger than that, so ordering is coverage
-# policy (round 14 edition). Rotation rules (tested by
-# tests/test_registry_rotation.py):
-#   1. every query never seen in ANY CORRECTNESS_r*.json artifact must
-#      be in the current window (first 50) — nothing ships a round
-#      without at least one driver check;
-#   2. every query whose code or oracle changed this round stays in
-#      the window — encoded as _TOUCHED_THIS_ROUND below (updated as
-#      part of each round's diff; the rotation test asserts it is a
-#      subset of the window). "Touched" is FUNCTION-level: a query is
-#      touched when a function on its plan lineage changed, not when
-#      an unrelated function in a shared module did (e.g. a
-#      ``minhash_signatures`` edit touches the LSH consumers but not
-#      ``doc_dedup_final``, which consumes only ``jaccard_pairs`` +
-#      ``resolve_near_dups`` from the same file);
-#   3. the incident-prone events.ts lineage (user_sessions) stays in
-#      the window every round;
-#   4. the overflow parks queries that were driver-green in the most
-#      recent round that checked them AND whose lineage this round's
-#      diff does not touch.
-#
-# STALENESS BOUND (ADVICE r9, medium): the ≤3-artifact bound is
-# evaluated AS OF WINDOW CONSTRUCTION — the last three artifacts with
-# round < _WINDOW_ROUND. The current round's own artifact (written by
-# the driver at round end, round == _WINDOW_ROUND) re-checks the
-# current window and never shrinks coverage, so it is excluded from
-# the bound rather than allowed to retro-invalidate a legal parking
-# decision. The forcing function moves to
-# test_window_rotated_for_every_artifact: an artifact with round >
-# _WINDOW_ROUND on disk means a new round began — that test goes red
-# with a message naming the rotation, by design, until the new
-# round's first commit rotates the window and bumps _WINDOW_ROUND.
-#
-# CAPACITY under ≤3: a 50-slot window sustains 4×50 − 3
-# (user_sessions occupies a slot every round) = 197 queries; the
-# registry size is asserted against that ceiling in
-# tests/test_registry_rotation.py::test_registry_within_window_capacity.
-# DECISION RULE when a round's mandatory returns + rule-1
-# registrations would exceed 50 (VERDICT r9 item 7): prefer RETIRING
-# a redundant variant (e.g. one of the three rolling-distinct
-# flavors) over moving the staleness bound again — a 5-round cycle
-# would outlive the local suite's regression horizon, while redundant
-# variants are exactly the coverage a full window can't afford.
-#
-# ROUND-14 WINDOW (optimization round 2): rule 2 dominates this
-# round — the construction-cost campaign touched five operator
-# families, so the window is 7 mandatory r10 returns (stale at r14
-# otherwise) + user_sessions (rule 3) + the 32 rule-2-touched
-# lineages + 10 r11-checked rotations chosen from the bench surface
-# (headline/extras lineages get driver re-checks the same round their
-# host session re-times them). The other 33 r11-checked queries park
-# one more round (legal: r11 is within the last-three artifacts
-# r11/r12/r13 as of construction) and are MANDATORY at r15.
-#
-# r14 DELIVERED (this round's diff; every lineage in-window):
-#   1. Star family: schema-memoized reads + one-call enriched
-#      projection (expression trees identical; construction 2x).
-#   2. MinHash/LSH family: signature aggregates, band keys, and
-#      verify projections built as parsed expressions (plan-equal mod
-#      ids, exceptAll parity 0; construction 2-3x); size-gated store
-#      layout (no unconditional build shuffle, ADVICE r13); bounded
-#      arrival-token-set broadcast with a plan-tested shuffled-join
-#      fallback (VERDICT r13 item 5).
-#   3. Embedding family: per-site cosine scorer by measured volume
-#      (VERDICT r13 item 4 — serving sites back to the HOF form,
-#      verify sites keep the Arrow kernel; bit-identical either way);
-#      ivf_probe cells computed driver-side (two plan-time jobs and a
-#      Python-worker round trip removed, parity 0); cosine_batch
-#      null-contract pinned with a clear error + test.
-#   4. Percentiles hardening (the r13-prestaged queue): pairs persist
-#      replaces the exchange-reuse invariant (bit-equality with the
-#      native aggregate pinned under reuse=false) + non-numeric conf
-#      tolerance. All five consumers values-match.
-#   5. DSIR trio: ensure_scan_parallelism degrades to a no-op on
-#      Spark Connect-style sessions (ADVICE r13).
-#   6. nation_revenue: schema-memoized reads (6 reads/construction).
-#
-# SCHEDULE THROUGH r17 (last-checked map after r14 rotation: 33 r11 /
-# 45 r12 / 25 r13 / 50 r14): r15 = the 33 r11 (mandatory) +
-# user_sessions + 16 r12; r16 = the remaining 29 r12 (mandatory) +
-# user_sessions + 20 r13; r17 = the remaining 5 r13 + 44 r14 +
-# user_sessions. Capacity ceiling 4x50-3 = 197 >= 153 holds with
-# slack at every step.
-#
-# r15 QUEUE (ADVICE r12 low, event_time.py:544): make the null-week
-# contract of user_weekly_retention explicit in the ORACLE SQL
-# (WHERE ts IS NOT NULL in ev) when the query rotates back in —
-# r12-checked, parked until r15/r16; the intended behavior (null
-# weeks drop) is pinned by a pytest fixture since r13 (test-only,
-# rule-2-free).
-
-_WINDOW_ROUND = 14
-
-# Rule-2 ledger: queries whose code or oracle this round's diff
-# touched (directly or through a plan-lineage function they consume).
-# The rotation test enforces these sit inside the window.
-_TOUCHED_THIS_ROUND = [
-    "flagship_daily_segment_topk",
-    "serving_top_rows_lookup",
-    "published_segment_kpis",
-    "segment_kpis_compat",
-    "segment_kpis_intended",
-    "top_rows_per_day_compat",
-    "top_segments_per_day_intended",
-    "doc_minhash_near_dups",
-    "doc_dedup_final_lsh",
-    "doc_arrivals_dedup_lsh",
-    "doc_arrivals_dedup_store",
-    "doc_split_leakage_audit_lsh",
-    "embedding_topk_bruteforce",
-    "embedding_lsh_topk",
-    "embedding_hard_negatives",
-    "embedding_near_dup_pairs",
-    "embedding_near_dup_pairs_lsh",
-    "embedding_dedup_final",
-    "embedding_dedup_final_lsh",
-    "embedding_ivf_topk",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "ivf_imbalance",
-    "order_price_percentiles",
-    "doc_lm_outliers",
-    "lineitem_winsorized_stats",
-    "doc_source_quality_buckets",
-    "orders_price_decile_bins",
-    "doc_dsir_weights",
-    "doc_dsir_sample",
-    "doc_dsir_admissions",
-    "nation_revenue",
-    # --- memo-adoption sweep (resumed session): per-lineage schema-
-    # memoized reads in these plan functions (readers unchanged; every
-    # lineage below was already in the r14 window as a rule-3 return
-    # or an r11-checked rotation before being touched) ---
-    "customer_order_deltas",
-    "events_json_extract",
-    "user_sessions",
-    "events_value_running_total",
-    "events_activity_concurrency",
-    "customer_rolling_spend",
-    "clicks_asof_prior_view",
-    "error_followup_counts",
-    "doc_bm25_topk",
-    "doc_lm_score",
-    "doc_hybrid_rrf",
-    "doc_boilerplate_fraction",
-    "asset_content_hashes",
-]
-
-_CHECK_FIRST = [
-    # --- checked r10, in none of r11/r12/r13: mandatory this round ---
-    "returnflag_cube",
-    "order_date_parts",
-    "buyer_eventer_intersect",
-    "buyers_not_eventers_except",
-    "returnflag_status_pivot",
-    "events_value_running_total",
-    "events_activity_concurrency",
-    # --- incident-prone events.ts lineage, in-window every round ---
-    "user_sessions",
-    # --- rule 2: the 32 lineages this round's optimization diff
-    # touched (see _TOUCHED_THIS_ROUND; same order) ---
-    "flagship_daily_segment_topk",
-    "serving_top_rows_lookup",
-    "published_segment_kpis",
-    "segment_kpis_compat",
-    "segment_kpis_intended",
-    "top_rows_per_day_compat",
-    "top_segments_per_day_intended",
-    "doc_minhash_near_dups",
-    "doc_dedup_final_lsh",
-    "doc_arrivals_dedup_lsh",
-    "doc_arrivals_dedup_store",
-    "doc_split_leakage_audit_lsh",
-    "embedding_topk_bruteforce",
-    "embedding_lsh_topk",
-    "embedding_hard_negatives",
-    "embedding_near_dup_pairs",
-    "embedding_near_dup_pairs_lsh",
-    "embedding_dedup_final",
-    "embedding_dedup_final_lsh",
-    "embedding_ivf_topk",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "ivf_imbalance",
-    "order_price_percentiles",
-    "doc_lm_outliers",
-    "lineitem_winsorized_stats",
-    "doc_source_quality_buckets",
-    "orders_price_decile_bins",
-    "doc_dsir_weights",
-    "doc_dsir_sample",
-    "doc_dsir_admissions",
-    "nation_revenue",
-    # --- r11-checked rotations, bench-surface first (the other 33
-    # r11 queries park one round and are mandatory at r15) ---
-    "customer_order_deltas",
-    "asset_content_hashes",
-    "customer_rolling_spend",
-    "clicks_asof_prior_view",
-    "error_followup_counts",
-    "doc_lm_score",
-    "events_json_extract",
-    "doc_bm25_topk",
-    "doc_boilerplate_fraction",
-    "doc_hybrid_rrf",
-]
-_CHECK_LAST = [
-    # checked r11, parked: ALL 33 are stale at r15 construction and
-    # MUST form the core of the r15 window
-    "doc_source_mix",
-    "asset_features",
-    "user_sessions_native",
-    "events_daily_tumbling",
-    "events_sliding_windows",
-    "customer_snapshot_diff",
-    "order_approx_stats",
-    "weekly_user_sketch_rollup",
-    "part_text_features",
-    "csv_quarantine_counts",
-    "priority_returns_exists",
-    "small_qty_part_revenue",
-    "activity_union_by_name",
-    "orders_price_histogram",
-    "doc_chunks",
-    "part_scalar_showcase",
-    "active_user_ids_union",
-    "customers_with_events_semi",
-    "priority_status_grouping_sets",
-    "doc_chunk_packs",
-    "doc_inverted_index",
-    "doc_quality_classifier",
-    "doc_tfidf_top_terms",
-    "doc_top_tokens",
-    "doc_decontamination",
-    "segment_distinct_stats",
-    "doc_bpe_token_counts",
-    "doc_ngram_containment",
-    "doc_temperature_mix",
-    "orders_price_drift",
-    "doc_token_cms_estimates",
-    "doc_weighted_sample",
-    "doc_eval_span_overlap",
-    # checked r12, parked: 16 rotate in at r15, the rest at r16
-    # (must include user_weekly_retention for the queued oracle edit)
-    "customer_scd1_merge",
-    "customer_cdc_apply",
-    "orders_profile",
-    "user_conversion_funnel",
-    "doc_per_source_sample",
-    "fk_integrity_audit",
-    "orders_expectations",
-    "events_forward_fill",
-    "volume_shipping",
-    "user_daily_anomalies",
-    "doc_arrivals_dedup",
-    "doc_training_order",
-    "doc_curation_funnel",
-    "doc_char_entropy",
-    "asset_frame_samples",
-    "events_daily_complete",
-    "user_weekly_retention",
-    "event_type_transitions",
-    "events_daily_rollup_incremental",
-    "event_type_cooccurrence",
-    "events_wow_change",
-    "segment_nation_chi2",
-    "part_name_fuzzy_matches",
-    "lineitem_corr_matrix",
-    "customer_scd2_apply",
-    "customer_balance_zscores",
-    "orders_pit_customer_balance",
-    "rolling_7d_distinct_users",
-    "events_customers_null_bypass",
-    "clicks_asof_recent_view",
-    "doc_encoding_audit",
-    "doc_novelty_fraction",
-    "doc_decontamination_bloom",
-    "daily_new_users_cumulative",
-    "doc_length_buckets",
-    "order_quantity_arrays",
-    "event_key_skew_profile",
-    "doc_split_assignment",
-    "doc_split_leakage_audit",
-    "doc_vocab_coverage",
-    "eventers_orderers_full_outer",
-    "top_orders_global",
-    "customers_without_events_anti",
-    "doc_scrub_duplicate_spans",
-    "doc_source_token_budget",
-    # checked r13, parked: rotate r16/r17
-    "top_return_customers",
-    "nation_revenue_pareto",
-    "doc_token_budget_sample",
-    "doc_lang_confusion",
-    "doc_token_dup_share",
-    "doc_token_stats",
-    "doc_quality",
-    "doc_lang_id",
-    "doc_exact_dedup",
-    "doc_jaccard_pairs",
-    "doc_simhash_near_dups",
-    "doc_repetition_signals",
-    "doc_pii_scrub",
-    "segment_event_value_salted",
-    "order_rank_flavors",
-    "pricing_summary",
-    "shipping_priority",
-    "returnflag_rollup",
-    "doc_bpe_merges",
-    "asset_near_dups",
-    "doc_duplicate_spans",
-    "rolling_7d_distinct_exact",
-    "doc_dedup_final",
-    "doc_dedup_keep_best",
-    "doc_dedup_cluster_stats",
-]
+_PINNED = "user_sessions"  # incident-prone events.ts lineage
 
 
-def _reorder(merged: dict) -> dict:
-    middle = [
-        k for k in merged if k not in _CHECK_FIRST and k not in _CHECK_LAST
-    ]
-    ordered = _CHECK_FIRST + middle + _CHECK_LAST
-    return {k: merged[k] for k in ordered if k in merged}
+@functools.cache
+def _last_checked() -> dict[str, int]:
+    """Query name -> newest round whose ``CORRECTNESS_r*.json`` next to
+    this module checked it (``_``-prefixed keys are metadata)."""
+    last: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if not m:
+            continue
+        with open(path) as f:
+            names = [k for k in json.load(f) if not k.startswith("_")]
+        for name in names:
+            last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -371,7 +73,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-    return _reorder(merged)
+    last = _last_checked()
+    order = sorted(merged, key=lambda n: (n != _PINNED, last.get(n, 0)))
+    return {name: merged[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -136,15 +136,6 @@ def _run_canary(spark, qs, sf_dir: str) -> dict[str, float | None]:
     return out
 
 
-def _staged_queries() -> dict:
-    """Implemented-but-not-yet-registered queries (rotation rule 1
-    keeps them out of the registry until a window slot opens); timed
-    as extras so their first registered round has a perf baseline.
-    Empty this round — the round-8 staged pair registered in round 9
-    once the staleness bound moved to ≤3 artifacts."""
-    return {}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -330,7 +321,7 @@ def main() -> None:
     extra_timings: dict[str, float | None] = {}
     import gc
 
-    extras_fns = {**{n: qs[n] for n in EXTRAS if n in qs}, **_staged_queries()}
+    extras_fns = {n: qs[n] for n in EXTRAS if n in qs}
     # Extras carry the headline's noise discipline since round 9
     # (VERDICT r8 item 6): TWO warm reps per extra, best-of recorded
     # as the comparable number and both reps published in extra_reps —

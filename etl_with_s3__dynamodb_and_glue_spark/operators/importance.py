@@ -107,7 +107,7 @@ def hashed_feature_counts(
     # parallelism.py): the unigram+bigram explode and per-gram md5
     # sit DIRECTLY on the corpus scan with no shuffle in between, so a
     # one-file input runs the whole featurization on one core.
-    # Interleaved A/B at sf0.1 (tools/probe_scan_parallelism.py):
+    # Interleaved A/B at sf0.1 (r13):
     # doc_dsir_weights 3.50 → 2.29 s (1.53×). Value-safe here by
     # construction: everything between this exchange and the next one
     # is per-row hashing, and the aggregates that follow are exact

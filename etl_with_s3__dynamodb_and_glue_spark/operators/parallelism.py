@@ -1,8 +1,8 @@
 """Input-split-adaptive parallelism for narrow scans (r13 optimization
 round; guide §2.5 'input skew — one huge unsplittable file').
 
-The failure mode, measured with the r13 event-log probes
-(tools/probe_stage_metrics.py / parse_eventlog.py): a parquet input
+The failure mode, measured from the event log (per-stage task counts;
+``perfbench/run.py --trace 1`` reports them): a parquet input
 written as ONE file with ONE row group yields a one-task scan, and
 every row-local stage stacked directly on that scan — tokenize,
 n-gram explode, per-gram hashing — runs on ONE core of the session
@@ -31,9 +31,9 @@ probe costs ~400 ms per call and was rejected).
 WHERE IT HELPS AND WHERE IT DOES NOT (both measured, r13): the win
 exists only when heavy per-row work sits on the scan with NO shuffle
 in between — the DSIR unigram+bigram featurization (3.50 → 2.29 s at
-sf0.1, 1.53×, tools/probe_scan_parallelism.py). Pipelines whose heavy
-stages already sit behind their own exchanges (the MinHash signature/
-band/verify chain) got 0.74–0.86× from the same change — the extra
+sf0.1, 1.53×; ``perfbench/run.py --trace 1`` gives the per-stage
+split). Pipelines whose heavy stages already sit behind their own
+exchanges (the MinHash signature/band/verify chain) got 0.74–0.86× from the same change — the extra
 exchange plus 32-task scheduling on many small stages costs more than
 the one-task scan saves — so it was deliberately NOT wired there.
 

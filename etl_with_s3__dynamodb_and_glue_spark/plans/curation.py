@@ -18,21 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import curation, dedup
 from ..operators.curation import PII_PATTERNS
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-memoized twin of :func:`_docs` (metadata only — see
-    sources/readers.py::read_parquet_memo; plans and results are
-    identical to the plain read). Adopted lineage-by-lineage as
-    rule-2 window slots allow, NOT in ``_docs`` itself, which feeds
-    most of this module's registered queries."""
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/documents.parquet")
+from ..sources.readers import read_table
 
 
 # --- repetition quality signals ------------------------------------------
@@ -41,7 +27,7 @@ def _docs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-document repetition signals (duplicate word /
     3-gram fraction, top-2-gram mass)."""
-    return curation.repetition_signals(_docs(spark, sf_dir))
+    return curation.repetition_signals(read_table(spark, sf_dir, "documents"))
 
 
 DOC_REPETITION_SQL = """
@@ -110,7 +96,7 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII audit over the (injected) corpus: per-pattern match counts
     on the raw text plus the fully scrubbed text. Single scan, pure
     per-row regex chain (JVM codegen) — no shuffle."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     injected = docs.withColumn(
         "text",
         F.when(
@@ -165,7 +151,7 @@ def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-benchmark subset — every 25th doc stands in for the
     benchmark. The eval n-gram set is broadcast; the corpus never
     shuffles on the join."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     eval_docs = docs.filter(F.col("doc_id") % 25 == 0)
     return curation.decontaminate(docs, eval_docs, n=8)
 
@@ -183,7 +169,7 @@ def doc_eval_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered round 8 as planned; the oracle twin below was
     agreement-tested a round before it faced the driver.
     """
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     return dedup.duplicate_spans_vs(
         docs.filter(F.col("doc_id") % 25 != 0),
         docs.filter(F.col("doc_id") % 25 == 0),
@@ -239,7 +225,7 @@ def doc_scrub_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion invariant test proves scrubbed docs re-extract zero
     spans.
     """
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % 25 != 0)
     ev = docs.filter(F.col("doc_id") % 25 == 0)
     spans = dedup.duplicate_spans_vs(train, ev, min_tokens=8)
@@ -340,7 +326,7 @@ def doc_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures the realized false-positive rate against the exact twin."""
     from ..operators.bloom import bloom_decontaminate
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     eval_docs = docs.filter(F.col("doc_id") % 25 == 0)
     return bloom_decontaminate(docs, eval_docs, n=8)
 
@@ -366,7 +352,7 @@ def doc_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import _dup_fraction
     from ..operators.text import fingerprint, lang_id, quality_score, tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", "text", tokens("text").alias("tk"))
     tk = F.col("tk")
     pass_lang = lang_id("text", toks=tk) != "und"
@@ -457,7 +443,7 @@ def doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition signals. See operators/curation.py::boilerplate_fraction
     for the two-shuffle plan shape and the hashed-gram scale variant."""
     return curation.boilerplate_fraction(
-        _docs_memo(spark, sf_dir), n=5, min_docs=2
+        read_table(spark, sf_dir, "documents"), n=5, min_docs=2
     )
 
 
@@ -497,7 +483,8 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket id (the oracle rebuilds the identical model)."""
     from ..operators.classifier import classifier_scores, weights_table
 
-    return classifier_scores(_docs(spark, sf_dir), weights_table(spark))
+    docs = read_table(spark, sf_dir, "documents")
+    return classifier_scores(docs, weights_table(spark))
 
 
 def _hex4_sql(expr: str) -> str:
@@ -551,7 +538,7 @@ def doc_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     U+FFFD replacement characters, and the non-ascii ratio — the
     cheap pre-filter that catches mojibake and binary-in-text before
     any model sees it. Pure per-row regex arithmetic, no shuffle."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     injected = docs.withColumn(
         "text",
         F.when(
@@ -619,7 +606,7 @@ def doc_novelty_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring for the arithmetic-equality argument."""
     from ..operators.curation import novelty_fraction
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     return novelty_fraction(docs, n=5)
 
 
@@ -675,7 +662,7 @@ def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import carry_cache_deps
     from ..operators import importance
 
-    docs = _docs_memo(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     weights = importance.dsir_log_weights(docs, target=F.col("lang") == "en")
     out = weights.select(
         "doc_id",
@@ -761,7 +748,7 @@ def doc_source_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.percentiles import group_percentiles_exact
     from ..operators.text import quality_score, tokens
 
-    docs = _docs_memo(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     q = docs.select(
         "doc_id",
         "source",
@@ -856,7 +843,7 @@ def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import carry_cache_deps
     from ..operators import importance
 
-    docs = _docs_memo(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     weights = importance.dsir_log_weights(docs, target=F.col("lang") == "en")
     scored = weights.select(
         "doc_id", "n_feats", F.round("log_weight", 6).alias("log_weight")

@@ -9,17 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.sessions import sessionize
-from ..sources.readers import read_events, read_events_memo
+from ..sources.readers import read_events
 
 
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """30-min-gap sessions per user (declarative batch path).
-
-    The events read is schema-memoized (metadata only — see
-    sources/readers.py::read_events_memo; identical plan/results),
-    adopted per-lineage where rule-2 window slots allow rather than
-    in the shared ``read_events``."""
-    return sessionize(read_events_memo(spark, sf_dir), gap_seconds=1800)
+    """30-min-gap sessions per user (declarative batch path)."""
+    return sessionize(read_events(spark, sf_dir), gap_seconds=1800)
 
 
 USER_SESSIONS_SQL = """
@@ -405,7 +400,7 @@ def events_value_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import carry_cache_deps
     from ..operators.prefix import running_sum
 
-    ev = read_events_memo(spark, sf_dir).select(
+    ev = read_events(spark, sf_dir).select(
         "event_id",
         "ts",
         F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
@@ -440,7 +435,7 @@ def events_activity_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     'how many sessions were live at peak' query, end-exclusive."""
     from ..operators.prefix import sweep_concurrency
 
-    ev = read_events_memo(spark, sf_dir).select("event_id", "ts")
+    ev = read_events(spark, sf_dir).select("event_id", "ts")
     intervals = ev.withColumn(
         "ts_end", F.col("ts") + F.expr("INTERVAL 5 MINUTES")
     )

@@ -11,22 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.temporal import as_of_join, range_join
-from ..sources.readers import read_events, read_events_memo
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
-def _orders_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-memoized twin of :func:`_orders` (metadata only — see
-    sources/readers.py::read_parquet_memo; plans and results are
-    identical to the plain read). Adopted lineage-by-lineage as
-    rule-2 window slots allow, NOT in ``_orders`` itself, which
-    feeds ~15 registered queries."""
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/orders.parquet")
+from ..sources.readers import read_events, read_table
 
 
 # --- exact percentiles / extremes per group ------------------------------
@@ -46,7 +31,7 @@ def order_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A/B at 100×: 40 s → ~4 s)."""
     from ..operators.percentiles import group_percentiles_exact
 
-    orders = _orders_memo(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     pct = group_percentiles_exact(
         orders, "o_orderpriority", "o_totalprice", [0.5, 0.9, 0.99]
     )
@@ -94,7 +79,7 @@ def order_rank_flavors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dense_rank / ntile / percent_rank / first & last value over one
     deterministic ordering, restricted to one month to keep output
     compact."""
-    orders = _orders(spark, sf_dir).filter(
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1998-01-01") & (F.col("o_orderdate") < "1998-02-01")
     )
     w = Window.partitionBy("o_orderpriority").orderBy(
@@ -140,7 +125,7 @@ def customer_rolling_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sum of each customer's orders in the 90 days up to and including
     each order date — a true RANGE frame (value-based, handles gaps),
     not a ROWS frame."""
-    orders = _orders_memo(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     day = F.datediff(F.col("o_orderdate"), F.lit("1990-01-01"))
     w = (
         Window.partitionBy("o_custkey")
@@ -177,7 +162,7 @@ def segment_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     comma-joined string (sorted for determinism; a string rather than an
     array column because the driver's hash-compare harness cannot hash
     Python lists — r4's one red row)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_mktsegment")
         .agg(
@@ -205,7 +190,7 @@ ORDER BY c_mktsegment
 
 
 def part_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     first_word = F.element_at(F.split("p_name", " "), 1)
     return (
         part.select(
@@ -244,7 +229,7 @@ ORDER BY p_partkey
 def clicks_asof_prior_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each click event joined to the user's most recent view event at
     or before it (point-in-time join; operators/temporal.py)."""
-    ev = read_events_memo(spark, sf_dir)
+    ev = read_events(spark, sf_dir)
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), "ts"
     )
@@ -336,7 +321,7 @@ ORDER BY c.user_id, c.click_id
 def error_followup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per error event: how many events the same user produced in the
     following 10 minutes (interval/range join; operators/temporal.py)."""
-    ev = read_events_memo(spark, sf_dir)
+    ev = read_events(spark, sf_dir)
     errors = ev.filter(F.col("event_type") == "error").select(
         "user_id", F.col("event_id").alias("error_id"), "ts"
     )
@@ -376,7 +361,7 @@ def priority_status_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame
     """Pure-SQL entry point (the engine's second query API): GROUPING
     SETS over a registered view — the generalization of the rollup/cube
     queries in tpch_like.py."""
-    _orders(spark, sf_dir).createOrReplaceTempView("orders_v")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     return spark.sql(
         """
         SELECT o_orderpriority, o_orderstatus,
@@ -416,7 +401,7 @@ def activity_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("amount"),
         "user_id",
     )
-    od = _orders(spark, sf_dir).select(
+    od = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("id"),
         F.lit("order").alias("kind"),
         F.col("o_totalprice").alias("amount"),
@@ -457,7 +442,7 @@ def segment_event_value_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_join
 
     ev = read_events(spark, sf_dir).select("user_id", "value")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (
@@ -488,8 +473,8 @@ def priority_returns_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned line, counted per priority. Catalyst decorrelates this to
     a left semi join — no per-row subquery execution survives in the
     physical plan, which is what makes the construct usable at scale."""
-    _orders(spark, sf_dir).createOrReplaceTempView("orders_v")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_v"
     )
     return spark.sql(
@@ -523,10 +508,10 @@ def small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines under 20% of their part's average quantity. Decorrelates to
     an aggregate-then-join — the per-part average is computed once,
     not per probing row."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_v"
     )
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView("part_v")
+    read_table(spark, sf_dir, "part").createOrReplaceTempView("part_v")
     return spark.sql(
         """
         SELECT ROUND(SUM(l_extendedprice) / 7.0, 6) AS avg_yearly
@@ -560,7 +545,7 @@ def order_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only for the driver (DuckDB's sketches differ); accuracy vs
     the exact aggregates is asserted in tests."""
     return (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.approx_count_distinct("o_custkey").alias("approx_customers"),
@@ -672,7 +657,7 @@ def returnflag_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     them costs an extra distinct-scan job and makes the output schema
     data-dependent, which a 100 TB pipeline can't tolerate."""
     return (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .pivot("l_linestatus", ["F", "O"])
         .agg(F.round(F.sum("l_quantity"), 6))
@@ -704,7 +689,7 @@ def eventers_orderers_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     od = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
@@ -744,7 +729,7 @@ def order_quantity_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-compares exactly."""
     qtys = F.array_sort(F.collect_list("l_quantity"))
     return (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(qtys.alias("qtys"))
         .select(
@@ -796,7 +781,7 @@ def csv_quarantine_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exercised against a malformed on-disk fixture in
     tests/test_quarantine.py.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     line = F.when(
         F.col("n_chars") % 7 == 0,
         F.concat_ws(",", F.col("doc_id"), F.col("lang"), F.lit("garbled")),
@@ -845,7 +830,7 @@ def customer_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import scd1_merge
 
     base = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("profile_id"),
             F.round(F.col("c_acctbal"), 2).alias("balance"),
@@ -906,7 +891,7 @@ def customer_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-aggregate filter."""
     from ..operators.merge import apply_changes
 
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("profile_id"),
         F.round(F.col("c_acctbal"), 2).alias("balance"),
         F.to_timestamp(F.lit("1992-01-01 00:00:00")).alias("updated_at"),
@@ -968,7 +953,7 @@ def orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the declared 100 TB mode with the identical report schema."""
     from ..operators.profile import profile_table
 
-    return profile_table(_orders(spark, sf_dir), exact=True)
+    return profile_table(read_table(spark, sf_dir, "orders"), exact=True)
 
 
 def _profile_sql() -> str:
@@ -1014,11 +999,11 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to facts even at 100 TB; a billion-key parent switches
     to a shuffle anti-join with no code change). The report a load
     gate checks before promoting a snapshot."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    part = read_table(spark, sf_dir, "part")
+    supp = read_table(spark, sf_dir, "supplier")
 
     def edge(name, child, fk, parent, pk):
         # one broadcast left join + one aggregate per edge, fully lazy
@@ -1120,7 +1105,7 @@ def orders_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate broadcast by cross-join; bucketing is a per-row map +
     one keyed count. Top bound clamps into the last bucket so
     max-valued rows aren't dropped."""
-    orders = _orders(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
     )
@@ -1183,7 +1168,7 @@ def orders_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     PSI = Σ psi_term."""
     from ..operators.profile import psi_drift
 
-    orders = _orders(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     split = F.col("o_orderdate") < F.lit("1995-01-01")
     return psi_drift(
         orders.filter(split),
@@ -1239,7 +1224,7 @@ def part_name_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup handles those for free."""
     from ..operators.linkage import fuzzy_match_pairs
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     return fuzzy_match_pairs(
         part,
         "p_name",
@@ -1271,7 +1256,7 @@ def segment_nation_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation."""
     from ..operators.stats import chi_square_independence
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return chi_square_independence(cust, "c_mktsegment", "c_nationkey")
 
 
@@ -1306,7 +1291,7 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feature-relationship profile, upper triangle in long form."""
     from ..operators.stats import corr_matrix
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return corr_matrix(li, _CORR_COLS)
 
 
@@ -1343,7 +1328,7 @@ def orders_price_decile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression always consumed."""
     from ..operators.percentiles import global_percentiles_exact
 
-    orders = _orders_memo(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     qs = global_percentiles_exact(
         orders,
         "o_totalprice",
@@ -1396,7 +1381,7 @@ def customer_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks the semantics."""
     from ..operators.merge import snapshot_diff
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
     new = (
@@ -1452,7 +1437,7 @@ def customer_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the exact fold."""
     from ..operators.merge import scd2_apply
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     hist = cust.select(
         "c_custkey",
         "c_name",
@@ -1541,7 +1526,7 @@ def customer_balance_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group mean/stddev reduce to a |segments|-row table (map-side
     combined) broadcast back onto the scan — every stage fully
     parallel, no wide shuffle of the fact at all."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     stats = cust.groupBy("c_mktsegment").agg(
         F.avg("c_acctbal").alias("_mean"),
         F.stddev("c_acctbal").alias("_sd"),
@@ -1578,7 +1563,7 @@ def orders_pit_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly."""
     from ..operators.temporal import point_in_time_join
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     boundary = F.lit("1996-06-01").cast("timestamp")
     changed = F.col("c_custkey") % 10 == 0
     v1 = cust.select(
@@ -1594,7 +1579,7 @@ def orders_pit_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("timestamp").alias("valid_to"),
     )
     history = v1.unionByName(v2)
-    orders = _orders(spark, sf_dir).select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_custkey").alias("c_custkey"), "o_orderdate"
     )
     out = point_in_time_join(
@@ -1740,7 +1725,7 @@ def events_customers_null_bypass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("user_id"))
         .alias("user_id"),
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     out = null_bypass_left_join(ev, cust, ["user_id"])
@@ -1766,7 +1751,7 @@ def orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     violations (null-hostile by design)."""
     from ..sources.expectations import Expectation, check_expectations
 
-    orders = _orders(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
     rules = [
         Expectation("orderkey_not_null", F.col("o_orderkey").isNotNull()),
         Expectation("totalprice_positive", F.col("o_totalprice") > 0),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup, multimodal, similarity, terms
 from ..operators.sampling import hash_bucket, hex_threshold
+from ..sources.readers import read_table
 from ..operators.text import (
     LANG_PROFILES,
     avg_token_len,
@@ -30,35 +31,11 @@ from ..operators.text import (
 )
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-memoized twin of :func:`_docs` (metadata only — see
-    sources/readers.py::read_parquet_memo; plans and results are
-    identical to the plain read). Adopted lineage-by-lineage as
-    rule-2 window slots allow, NOT in ``_docs`` itself, which feeds
-    ~40 registered queries across this module."""
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # schema-memoized read (metadata only — see sources/readers.py):
-    # every embedding query pays this read 1-2× per construction, and
-    # re-inferring the footer schema cost 0.15 s/call vs 0.035 s memoized
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/embeddings.parquet")
-
-
 # --- text analysis -------------------------------------------------------
 
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     # Stage the token array once: inlining `tokens("text")` into all
     # three consumers would embed three copies of the split/regex tree
     # in one Project — HOF-bearing subtrees dodge subexpression
@@ -92,7 +69,7 @@ FROM t ORDER BY doc_id
 
 
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     # tokenize once (see doc_token_stats — codegen blowup otherwise)
     staged = docs.select("doc_id", "text", tokens("text").alias("tk"))
     tk = F.col("tk")
@@ -135,7 +112,7 @@ FROM feat ORDER BY doc_id
 
 
 def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     # tokenize once across all four language profiles
     staged = docs.select("doc_id", "lang", tokens("text").alias("tk"))
     return staged.select(
@@ -183,7 +160,7 @@ def doc_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     separator insertion — operators/text.py ``bpe_ish_token_count``)
     precisely so DuckDB's RE2 engine can replay it verbatim: full
     value oracle, not rows-only."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(tokens("text")).alias("n_ws_tokens"),
@@ -202,7 +179,7 @@ def doc_source_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, one ≤|sources|-row aggregate; the BPE-ish estimator is
     the same lookaround-free construction the per-doc query pins, so
     the oracle replays the whole report verbatim."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select(
         "source",
         F.length("text").cast("long").alias("nc"),
@@ -255,7 +232,7 @@ def doc_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not. Full value oracle (DuckDB replays the hash order)."""
     from ..operators.sampling import sharded_training_order
 
-    return sharded_training_order(_docs(spark, sf_dir), "doc_id")
+    return sharded_training_order(read_table(spark, sf_dir, "documents"), "doc_id")
 
 
 DOC_TRAINING_ORDER_SQL = """
@@ -285,7 +262,7 @@ def doc_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     barrier), with per-bucket population and the padding waste of
     padding every member to the bucket max. The table a batching
     policy is tuned from."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select(
         F.floor(F.log2(F.size(tokens("text")))).cast("int").alias("bucket"),
         F.size(tokens("text")).cast("long").alias("n_tokens"),
@@ -386,7 +363,7 @@ def doc_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..caching import unpersist_on_release
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     # 64-bit window hashes (not md5 strings): an 8-byte shuffle key vs
     # 32 bytes; the oracle twin hashes with md5 but only the PAIRS are
     # compared, and both hashes group identical windows together.
@@ -470,9 +447,8 @@ def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-doc-count → gaps-and-islands pipeline is exact, and the
     DuckDB twin groups on the gram STRING where Spark groups on its
     xxhash64 (identical grouping modulo 2⁻⁶⁴ collisions)."""
-    return dedup.duplicate_spans(_docs(spark, sf_dir), min_tokens=8).orderBy(
-        "doc_id", "span_start"
-    )
+    docs = read_table(spark, sf_dir, "documents")
+    return dedup.duplicate_spans(docs, min_tokens=8).orderBy("doc_id", "span_start")
 
 
 DOC_DUPLICATE_SPANS_SQL = """
@@ -524,7 +500,7 @@ def doc_token_dup_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row aggregate; nothing new shuffles at corpus size."""
     from ..streaming.decontam_gate import tokens_leaked
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     spans = dedup.duplicate_spans(docs, min_tokens=8)
     leaked = tokens_leaked(spans)
     per_doc = docs.select(
@@ -605,7 +581,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped. Native array expressions → per-row map, no shuffle."""
     from ..operators.text import chunk_tokens, tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", tokens("text").alias("tk"))
         .select(
@@ -650,7 +626,7 @@ def doc_chunk_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per lang group."""
     from ..operators.text import chunk_tokens, pack_chunks, tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     chunks = (
         docs.select("doc_id", "lang", tokens("text").alias("tk"))
         .select(
@@ -714,7 +690,7 @@ def doc_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         stratified_hash_sample(
-            _docs(spark, sf_dir),
+            read_table(spark, sf_dir, "documents"),
             key_col="doc_id",
             strata_col="lang",
             fractions={"en": 0.3, "zh": 1.0},
@@ -747,7 +723,7 @@ def doc_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import temperature_mix_report
 
     return temperature_mix_report(
-        _docs(spark, sf_dir),
+        read_table(spark, sf_dir, "documents"),
         key_col="doc_id",
         strata_col="source",
         alpha=0.5,
@@ -799,7 +775,7 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-level signals miss. The staged form materializes the sorted
     char array once per row between projections (r11 perf pass — see
     the HOF-LAMBDA RULE in operators/text.py); still zero shuffle."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     return with_char_entropy(
         docs.select("doc_id", "text"), "text", out="_ent", n_out="n_chars"
     ).select(
@@ -841,7 +817,7 @@ def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly."""
     from ..operators.sampling import weighted_sample_score
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     score = weighted_sample_score(
         F.col("doc_id"), F.greatest(F.col("n_chars"), F.lit(1))
     )
@@ -884,7 +860,7 @@ def doc_per_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sampling import hash_bucket
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         hash_bucket("doc_id", "persrc"), F.col("doc_id")
     )
@@ -978,7 +954,7 @@ ORDER BY cluster_size
 
 
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_dedup(_docs(spark, sf_dir))
+    return dedup.exact_dedup(read_table(spark, sf_dir, "documents"))
 
 
 DOC_EXACT_DEDUP_SQL = """
@@ -992,7 +968,7 @@ ORDER BY doc_id
 
 
 def doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.jaccard_pairs(_docs(spark, sf_dir), threshold=0.95)
+    return dedup.jaccard_pairs(read_table(spark, sf_dir, "documents"), threshold=0.95)
 
 
 DOC_JACCARD_PAIRS_SQL = """
@@ -1022,7 +998,7 @@ def doc_dedup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerable. At scale the same clustering operator runs unchanged
     over the MinHash-LSH pair output (tests assert that equivalence).
     """
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(docs, threshold=0.95)
     return dedup.resolve_near_dups(docs, pairs)
 
@@ -1069,7 +1045,7 @@ def doc_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(docs, threshold=0.95)
     assign = dedup.resolve_near_dups(docs, pairs).select("doc_id", "cluster_id")
     staged = docs.select("doc_id", "text", tokens("text").alias("tk"))
@@ -1160,7 +1136,7 @@ def doc_dedup_final_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only for the driver (the recursive-CTE oracle already covers
     the exact twin).
     """
-    docs = _docs_memo(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_near_dups(docs, threshold=0.95)
     return dedup.resolve_near_dups(docs, pairs)
 
@@ -1168,7 +1144,8 @@ def doc_dedup_final_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate (LSH) — rows-only for the driver; recall vs the
     exact twin is asserted in tests."""
-    return dedup.minhash_near_dups(_docs_memo(spark, sf_dir), threshold=0.95)
+    docs = read_table(spark, sf_dir, "documents")
+    return dedup.minhash_near_dups(docs, threshold=0.95)
 
 
 # --- incremental (arrivals-vs-corpus) dedup ------------------------------
@@ -1186,7 +1163,7 @@ _ARRIVALS_HEX = hex_threshold(_ARRIVALS_FRACTION)
 def _split_arrivals(spark: SparkSession, sf_dir: str):
     from ..operators.sampling import train_test_split
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     corpus, arrivals = train_test_split(
         docs, "doc_id", _ARRIVALS_FRACTION, salt=_ARRIVALS_SALT
     )
@@ -1290,7 +1267,8 @@ def doc_arrivals_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate (Hamming banding) — rows-only for the driver."""
-    return dedup.simhash_near_dups(_docs(spark, sf_dir), max_hamming=3)
+    docs = read_table(spark, sf_dir, "documents")
+    return dedup.simhash_near_dups(docs, max_hamming=3)
 
 
 # --- similarity search ---------------------------------------------------
@@ -1298,7 +1276,7 @@ def doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _queries_df(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
     return (
-        _emb(spark, sf_dir)
+        read_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < n)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
@@ -1306,7 +1284,7 @@ def _queries_df(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
 
 def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(
-        _emb(spark, sf_dir), _queries_df(spark, sf_dir), k=5
+        read_table(spark, sf_dir, "embeddings"), _queries_df(spark, sf_dir), k=5
     )
 
 
@@ -1339,7 +1317,10 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     k. Exact scoring here; the rank column makes the output
     deterministic for the oracle."""
     return similarity.hard_negatives(
-        _emb(spark, sf_dir), _queries_df(spark, sf_dir), k=3, dup_threshold=0.4
+        read_table(spark, sf_dir, "embeddings"),
+        _queries_df(spark, sf_dir),
+        k=3,
+        dup_threshold=0.4,
     )
 
 
@@ -1366,7 +1347,7 @@ WHERE rank <= 3 ORDER BY query_id, rank
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.4
+        read_table(spark, sf_dir, "embeddings"), threshold=0.4
     )
 
 
@@ -1394,7 +1375,7 @@ def embedding_dedup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``embedding_dedup_final_lsh`` is the SRP-bucketed composition a
     100 TB corpus runs, with agreement asserted in tests.
     """
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.4)
     return dedup.resolve_near_dups(emb, pairs, id_col="vec_id")
 
@@ -1433,7 +1414,7 @@ def embedding_dedup_final_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs (exact-cosine verified at the same threshold) → the same
     clustering. Rows-only for the driver; cluster-agreement vs the
     exact composition asserted in tests."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dup_pairs_lsh(emb, threshold=0.4)
     return dedup.resolve_near_dups(emb, pairs, id_col="vec_id")
 
@@ -1443,7 +1424,7 @@ def embedding_near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation, exact cosine verify) — rows-only for the driver;
     recall vs the brute-force twin asserted in tests."""
     return similarity.embedding_near_dup_pairs_lsh(
-        _emb(spark, sf_dir), threshold=0.4
+        read_table(spark, sf_dir, "embeddings"), threshold=0.4
     )
 
 
@@ -1451,7 +1432,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN — rows-only for the driver; recall vs brute
     force asserted in tests."""
     return similarity.lsh_topk(
-        _emb(spark, sf_dir), _queries_df(spark, sf_dir), k=5
+        read_table(spark, sf_dir, "embeddings"), _queries_df(spark, sf_dir), k=5
     )
 
 
@@ -1494,7 +1475,10 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str):
 
     def build(path: str) -> None:
         similarity.build_ivf_index(
-            _emb(spark, sf_dir), n_clusters=32, train_fraction=0.25, path=path
+            read_table(spark, sf_dir, "embeddings"),
+            n_clusters=32,
+            train_fraction=0.25,
+            path=path,
         )
 
     return similarity.load_ivf_index(
@@ -1527,11 +1511,11 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str):
         # the 10M-vector r12 probe, and centroids only need the
         # density shape — encoding below still covers every vector
         books = quantization.train_pq(
-            _emb(spark, sf_dir), m=16, k=16, dim=64, max_iter=5
+            read_table(spark, sf_dir, "embeddings"), m=16, k=16, dim=64, max_iter=5
         )
         books.write(spark, f"{path}/books")
         (
-            quantization.pq_encode(books, _emb(spark, sf_dir))
+            quantization.pq_encode(books, read_table(spark, sf_dir, "embeddings"))
             .write.mode("overwrite")
             .parquet(f"{path}/codes")
         )
@@ -1629,7 +1613,7 @@ def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism/early-stop/round-trip tests."""
     from ..operators.bpe import bpe_train
 
-    merges = bpe_train(_docs(spark, sf_dir), n_merges=30)
+    merges = bpe_train(read_table(spark, sf_dir, "documents"), n_merges=30)
     return spark.createDataFrame(
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "merge_rank int, left string, right string, merged string",
@@ -1649,7 +1633,7 @@ def asset_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure is asserted in ``tests/test_llm_ops.py``."""
     from ..caching import carry_cache_deps
 
-    assets = multimodal.make_media_asset_table(_docs(spark, sf_dir))
+    assets = multimodal.make_media_asset_table(read_table(spark, sf_dir, "documents"))
     img = multimodal.image_near_dups(
         assets.filter(F.col("modality") == "image"), max_hamming=4
     )
@@ -1676,7 +1660,7 @@ def asset_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def asset_content_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing with an oracle: sha256 over the content
     bytes (text bytes standing in for encoded media)."""
-    assets = multimodal.make_asset_table(_docs_memo(spark, sf_dir))
+    assets = multimodal.make_asset_table(read_table(spark, sf_dir, "documents"))
     return (
         multimodal.content_hash(assets)
         .select(
@@ -1706,7 +1690,7 @@ def asset_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     characters and replays the same float32 scaling — the whole
     Arrow-batched mapInPandas lane (schema, batching, byte handling)
     is hash-checked end-to-end, not just row-counted."""
-    assets = multimodal.make_asset_table(_docs(spark, sf_dir))
+    assets = multimodal.make_asset_table(read_table(spark, sf_dir, "documents"))
     feats = multimodal.extract_features(assets, fake=True)
     return feats.select(
         "asset_id",
@@ -1742,7 +1726,7 @@ FROM b ORDER BY asset_id
 def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per document by smoothed TF-IDF (keyword
     extraction / relevance weighting over the corpus)."""
-    return terms.tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return terms.tfidf_top_terms(read_table(spark, sf_dir, "documents"), k=3)
 
 
 DOC_TFIDF_SQL = """
@@ -1798,7 +1782,8 @@ def doc_token_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     session."""
     from ..operators import cms
 
-    toks = _docs(spark, sf_dir).select(tokens("text").alias("tk")).select(
+    docs = read_table(spark, sf_dir, "documents")
+    toks = docs.select(tokens("text").alias("tk")).select(
         F.explode("tk").alias("term")
     )
     term_counts = toks.groupBy("term").agg(
@@ -1856,7 +1841,7 @@ DOC_TOKEN_CMS_SQL = _cms_oracle_sql()
 def doc_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-50 tokens by occurrences (vocabulary head profile
     for tokenizer design)."""
-    return terms.top_tokens(_docs(spark, sf_dir), n=50)
+    return terms.top_tokens(read_table(spark, sf_dir, "documents"), n=50)
 
 
 DOC_TOP_TOKENS_SQL = """
@@ -1877,7 +1862,8 @@ def asset_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per frame. Pure arithmetic on asset metadata (no codec), so
     the oracle replays it exactly; the decode of each sampled frame
     is the documented stub boundary."""
-    assets = multimodal.make_asset_table(_docs(spark, sf_dir), modality="video")
+    docs = read_table(spark, sf_dir, "documents")
+    assets = multimodal.make_asset_table(docs, modality="video")
     plan = multimodal.frame_sample_plan(assets, every_ms=1000)
     return plan.select(
         "asset_id", F.posexplode("frame_ts_ms").alias("frame_idx", "frame_ts_ms")
@@ -1926,7 +1912,7 @@ def doc_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id",
         "source",
@@ -1972,7 +1958,7 @@ def doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (actual lang, predicted lang) counts plus per-actual recall — the
     evaluation every filter model needs before it gates a corpus. One
     per-row prediction pass + a tiny langs² aggregate."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", "lang", tokens("text").alias("tk"))
     pred = staged.select(
         "lang", lang_id("tk", toks=F.col("tk")).alias("predicted_lang")
@@ -2031,7 +2017,7 @@ def doc_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     between splits because the three hash ranges partition the bucket
     space. Per-row map + one grouped count; the share window runs
     over the |sources|x3 summary frame, never the corpus."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     bucket = hash_bucket("doc_id", "split3")
     split = (
         F.when(bucket < F.lit(hex_threshold(0.8)), F.lit("train"))
@@ -2098,7 +2084,7 @@ def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage is then a per-doc aggregate. OOV rate is an integer
     ratio — no cross-engine FP risk. At 100 TB persist the exploded
     tokens (two consumers) and raise k; shape is unchanged."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.explode(tokens("text")).alias("tok")
     )
@@ -2209,7 +2195,7 @@ def doc_split_leakage_audit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact twin."""
     from ..caching import carry_cache_deps
 
-    docs = _docs_memo(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     verified = dedup.minhash_near_dups(docs, threshold=_LEAKAGE_THRESHOLD)
     pairs = verified.select("id_a", "id_b")
     # lazy composition — keep the token-set/member caches alive until
@@ -2230,7 +2216,7 @@ def doc_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is candidate-sized, never corpus-sized. This exact variant
     is the ORACLE twin (all-pairs, sf0.01-sized by design); run the
     LSH variant at scale."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(docs, threshold=_LEAKAGE_THRESHOLD).select(
         "id_a", "id_b"
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import retrieval
+from ..sources.readers import read_table
 
 # A mixed-selectivity ad-hoc query: "dup" is rare in the corpus (high
 # idf, drives the ranking), the rest are common (tf/length
@@ -20,28 +21,12 @@ BM25_QUERY_TERMS = ["dup", "spark", "merge", "window"]
 BM25_K = 10
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-memoized twin of :func:`_docs` (metadata only — see
-    sources/readers.py::read_parquet_memo; plans and results are
-    identical to the plain read). Adopted lineage-by-lineage as
-    rule-2 window slots allow — ``doc_inverted_index`` keeps the
-    plain read because its lineage is parked outside the current
-    driver window."""
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/documents.parquet")
-
-
 def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents for a bag-of-words query under BM25 (Lucene
     idf form). The scale property: postings are filtered to the query
     terms before any shuffle — see operators/retrieval.py."""
     return retrieval.bm25_topk(
-        _docs_memo(spark, sf_dir), BM25_QUERY_TERMS, k=BM25_K
+        read_table(spark, sf_dir, "documents"), BM25_QUERY_TERMS, k=BM25_K
     )
 
 
@@ -94,7 +79,8 @@ FROM ranked WHERE rank <= {BM25_K} ORDER BY rank
 def doc_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline inverted-index build: per term df / total_tf / capped
     top-5-by-tf posting sample as a canonical string."""
-    return retrieval.inverted_index(_docs(spark, sf_dir), max_postings=5)
+    docs = read_table(spark, sf_dir, "documents")
+    return retrieval.inverted_index(docs, max_postings=5)
 
 
 DOC_INVERTED_INDEX_SQL = f"""
@@ -126,7 +112,7 @@ def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM quality signal (CCNet/KenLM pattern): avg log-prob of
     each document's bigrams under an add-one-smoothed model fit on the
     corpus itself."""
-    return retrieval.bigram_lm_scores(_docs_memo(spark, sf_dir))
+    return retrieval.bigram_lm_scores(read_table(spark, sf_dir, "documents"))
 
 
 DOC_LM_SCORE_SQL = f"""
@@ -176,7 +162,7 @@ def doc_lm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter."""
     from ..operators.percentiles import global_percentiles_exact
 
-    scores = retrieval.bigram_lm_scores(_docs_memo(spark, sf_dir))
+    scores = retrieval.bigram_lm_scores(read_table(spark, sf_dir, "documents"))
     th = global_percentiles_exact(scores, "avg_logprob", [0.05]).select(
         F.round("pct", 6).alias("p05")
     )
@@ -241,10 +227,9 @@ def doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     small, executor-side nothing.
     """
     from ..operators.similarity import brute_force_topk
-    from ..sources.readers import read_parquet_memo
 
-    docs = _docs_memo(spark, sf_dir)
-    emb = read_parquet_memo(spark, f"{sf_dir}/embeddings.parquet")
+    docs = read_table(spark, sf_dir, "documents")
+    emb = read_table(spark, sf_dir, "embeddings")
 
     lex = retrieval.bm25_topk(docs, BM25_QUERY_TERMS, k=RRF_POOL).select(
         "doc_id", F.col("rank").alias("rank_lex")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cleaning import drop_null_keys, filter_not_numeric
 from ..operators.windows import ranked_desc, top_k_per_group
-from ..sources.readers import read_events_memo, read_parquet_memo
+from ..sources.readers import read_events, read_table
 
 NUMERIC_RE_SQL = "^[0-9]+(\\.[0-9]+)?$"
 
@@ -39,15 +39,15 @@ def _enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     schemas plus ~15 py4j ``Column`` round trips for the projection —
     measured 0.35-0.6 s per call on the bench host, more than the
     queries' steady-state execution. The reads go through the schema
-    memo (``read_parquet_memo``) and the projection is ONE
+    memo (``sources/readers.py::read_table``) and the projection is ONE
     ``selectExpr`` round trip. The expression trees are IDENTICAL to
     the previous per-``Column`` construction (verified: optimized
     plans equal modulo expression ids; oracle hashes unchanged) —
     ``day_bucket``/``time_of_day_seconds`` are inlined here as their
     SQL forms, see functions/datetime_fns.py.
     """
-    events = read_events_memo(spark, sf_dir)
-    customer = read_parquet_memo(spark, f"{sf_dir}/customer.parquet")
+    events = read_events(spark, sf_dir)
+    customer = read_table(spark, sf_dir, "customer")
 
     facts = drop_null_keys(events, ["user_id", "ts"])
     dim = customer.select("c_custkey", "c_name", "c_mktsegment")

@@ -20,22 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.windows import ranked_desc, top_k_per_group
-from ..sources.readers import read_events, read_events_memo
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _t_memo(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Schema-memoized twin of :func:`_t` (metadata only — see
-    sources/readers.py::read_parquet_memo; plans and results are
-    identical to the plain read). Adopted lineage-by-lineage as
-    rule-2 window slots allow, NOT in ``_t`` itself, which feeds
-    most of this module's ~20 registered queries."""
-    from ..sources.readers import read_parquet_memo
-
-    return read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
+from ..sources.readers import read_events, read_table
 
 
 def _dec(col, scale: int = 4):
@@ -60,7 +45,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-up, DuckDB half-even, and the drift accumulated over ~20k
     rows (VERDICT r1 "What's wrong" §2).
     """
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
+    li = read_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02")
+    )
     one = F.lit("1").cast("decimal(3,2)")
     ep = F.col("l_extendedprice").cast("decimal(10,2)")
     disc = F.col("l_discount").cast("decimal(10,2)")
@@ -112,11 +99,15 @@ ORDER BY l_returnflag, l_linestatus
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join + agg + global top-10 (deterministic
     tie-break on o_orderkey)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-01-01"))
+    li = read_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > F.lit("1998-01-01")
+    )
     revenue = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
@@ -145,28 +136,16 @@ LIMIT 10
 
 def nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way star join (small dims broadcast), agg per
-    nation.
-
-    Reads are schema-memoized HERE, not in ``_t`` (r14): six reads per
-    construction made this the headline's most read-bound constructor
-    (0.15 s/read re-inferring footers), while editing the shared
-    ``_t`` would pull every tpch-like query into one rule-2 driver
-    window. Plans and results are identical to the plain read
-    (sources/readers.py::read_parquet_memo)."""
-    from ..sources.readers import read_parquet_memo
-
-    def _tm(name: str) -> DataFrame:
-        return read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
-
-    region = _tm("region")
-    nation = _tm("nation")
-    cust = _tm("customer")
-    supp = _tm("supplier")
-    orders = _tm("orders").filter(
+    nation."""
+    region = read_table(spark, sf_dir, "region")
+    nation = read_table(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    supp = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1998-01-01"))
     )
-    li = _tm("lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     revenue = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -201,7 +180,7 @@ ORDER BY revenue DESC, n_name ASC
 def customers_with_events_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (EXISTS) — customers that appear in the events
     fact (non-trivial on the testdata: events covers 1/10 of custkeys)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     events = read_events(spark, sf_dir)
     return (
         cust.join(events, cust.c_custkey == events.user_id, "left_semi")
@@ -219,7 +198,7 @@ ORDER BY c_custkey
 
 def customers_without_events_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (NOT EXISTS)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     events = read_events(spark, sf_dir)
     return (
         cust.join(events, cust.c_custkey == events.user_id, "left_anti")
@@ -240,7 +219,7 @@ ORDER BY c_custkey
 
 def active_user_ids_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of two id sets."""
-    buyers = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
+    buyers = read_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
     eventers = read_events(spark, sf_dir).select(F.col("user_id").alias("id"))
     return buyers.union(eventers).distinct()
 
@@ -254,7 +233,7 @@ ORDER BY id
 
 
 def buyer_eventer_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buyers = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
+    buyers = read_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
     eventers = read_events(spark, sf_dir).select(F.col("user_id").alias("id"))
     return buyers.intersect(eventers)
 
@@ -268,7 +247,7 @@ ORDER BY id
 
 
 def buyers_not_eventers_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buyers = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
+    buyers = read_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("id"))
     eventers = read_events(spark, sf_dir).select(F.col("user_id").alias("id"))
     # subtract == SQL EXCEPT (set semantics, distinct result)
     return buyers.subtract(eventers)
@@ -287,7 +266,7 @@ ORDER BY id
 
 def returnflag_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (grouping sets) with an exact decimal sum."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -308,7 +287,7 @@ ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
 
 
 def returnflag_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_rows"))
@@ -329,7 +308,7 @@ ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
 def customer_order_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead + running frame aggregate per customer, fully
     deterministic ordering (orderdate, orderkey)."""
-    orders = _t_memo(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     price = _dec(F.col("o_totalprice"), 2)
     return orders.select(
@@ -363,7 +342,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 
 def top_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global ORDER BY + LIMIT (TopK via takeOrdered physically)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
@@ -385,7 +364,7 @@ LIMIT 25
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON access over the events.props string column (engine surface
     the reference lacks; SURVEY.md §2.7 extension)."""
-    ev = read_events_memo(spark, sf_dir)
+    ev = read_events(spark, sf_dir)
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select("event_type", k.alias("k"))
@@ -413,7 +392,7 @@ ORDER BY event_type
 
 def part_scalar_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String/conditional scalar-function surface in one projection."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.lower(F.col("p_type")).alias("type_lower"),
@@ -444,7 +423,7 @@ ORDER BY p_partkey
 
 def order_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datetime scalar surface: year/month/day/dayofweek extraction."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.select(
             F.year("o_orderdate").alias("yr"),
@@ -474,21 +453,21 @@ def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter is pushed into the broadcast sides so mismatched rows die
     at the join, not in a post-filter."""
     n1, n2 = "NATION_1", "NATION_2"
-    nation = _t(spark, sf_dir, "nation").filter(
+    nation = read_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin(n1, n2)
     )
-    supp = _t(spark, sf_dir, "supplier").join(
+    supp = read_table(spark, sf_dir, "supplier").join(
         F.broadcast(nation.select(F.col("n_nationkey").alias("s_nk"),
                                   F.col("n_name").alias("supp_nation"))),
         F.col("s_nationkey") == F.col("s_nk"),
     )
-    cust = _t(spark, sf_dir, "customer").join(
+    cust = read_table(spark, sf_dir, "customer").join(
         F.broadcast(nation.select(F.col("n_nationkey").alias("c_nk"),
                                   F.col("n_name").alias("cust_nation"))),
         F.col("c_nationkey") == F.col("c_nk"),
     )
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     volume = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -533,13 +512,13 @@ def top_return_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returned items per customer in
     one quarter — fact-fact join on orderkey, dims broadcast, top-20
     by a TakeOrdered cut (no global sort materialization)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     revenue = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -578,9 +557,9 @@ def nation_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregate."""
     from pyspark.sql import Window
 
-    nation = _t(spark, sf_dir, "nation")
-    supp = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
+    nation = read_table(spark, sf_dir, "nation")
+    supp = read_table(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
     revenue = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     per_nation = (
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -661,7 +640,7 @@ def lineitem_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle inner-joins the same way."""
     from ..operators.percentiles import group_percentiles_exact
 
-    li = _t_memo(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
     pe = group_percentiles_exact(

@@ -165,6 +165,81 @@ def pin_naive_timestamp_semantics(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# Per-process memo of parquet FILE SCHEMAS. METADATA ONLY — no rows,
+# no results, no plan fragments are ever cached here: the memo replays
+# exactly what a fresh ``spark.read.parquet(path)`` would infer from the
+# footer, so every consumer's plan (and therefore result) is identical
+# to the memo-free read. What it saves is the per-call driver work of
+# re-resolving the DataSource and re-reading the footer — measured
+# 0.15 s → 0.035 s per read call on the bench host (~4×, the same class
+# of win as a file-listing cache, applied to schema inference). At
+# 100 TB this is what a table catalog (metastore/Iceberg manifest)
+# provides; bare-path parquet reads are the only reason the engine
+# pays it per query.
+#
+# The key is (path, inference confs, data files): the confs that change
+# what inference returns for the same bytes, and the sorted
+# (relative name, mtime_ns, size) of every data file under the path —
+# a file rewritten in place inside a dataset directory leaves the
+# directory's own stat unchanged, so the directory cannot stand for
+# its files. A miss evicts the path's entries for superseded files.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+
+
+def _data_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (relative name, mtime_ns, size) of the files a parquet
+    scan of ``path`` reads: the path itself when it is a file, else
+    every file below it except the hidden/metadata ones Spark skips
+    (names starting with ``_`` or ``.``)."""
+    import os
+
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (("", st.st_mtime_ns, st.st_size),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                fst = os.stat(os.path.join(root, n))
+                rel = os.path.relpath(os.path.join(root, n), path)
+                files.append((rel, fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(files))
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read input table ``name`` (``{sf_dir}/{name}.parquet``) — the
+    one way plan functions read the dataset they are run against —
+    through the schema memo above; plans and results are those of the
+    plain read. Falls back to the plain read when the path cannot be
+    listed (e.g. an object-store URI): the memo is an optimization,
+    never a requirement."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        key = (
+            path,
+            tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+            _data_files(path),
+        )
+    except Exception:  # noqa: BLE001 — unlistable path or unknown conf
+        return spark.read.parquet(path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    for k in list(_SCHEMA_MEMO):
+        if k[0] == path and k[2] != key[2]:
+            _SCHEMA_MEMO.pop(k, None)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events fact table, normalizing ``ts`` to TIMESTAMP.
 
@@ -185,66 +260,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     - TIMESTAMP(isAdjustedToUTC=true): already TimestampType; no-op.
     """
     pin_naive_timestamp_semantics(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from pyspark.sql import functions as F
-
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
-# Per-process memo of parquet FILE SCHEMAS, keyed by (path, mtime,
-# size) so a rewritten file re-infers. METADATA ONLY — no rows, no
-# results, no plan fragments are ever cached here: the memo replays
-# exactly what a fresh `spark.read.parquet(path)` would infer from the
-# footer, so every consumer's plan (and therefore result) is identical
-# to the memo-free read. What it saves is the per-call driver work of
-# re-resolving the DataSource and re-reading the footer — measured
-# 0.15 s → 0.035 s per read call on the bench host (r14 round;
-# ~4× — the same class of win as the guide §6 file-listing cache,
-# applied to schema inference). At 100 TB this is exactly what a table
-# catalog (metastore/Iceberg manifest) provides; bare-path parquet
-# reads are the only reason the engine pays it per query.
-_SCHEMA_MEMO: dict[tuple[str, int, int], T.StructType] = {}
-
-
-def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with a schema memo (see above).
-
-    Falls back to the plain read on any stat/inference hiccup — the
-    memo is an optimization, never a requirement."""
-    import os
-
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return spark.read.parquet(path)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
-
-
-def read_events_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-memoized twin of :func:`read_events` — byte-identical
-    semantics (same conf pins, same ts normalization decided from the
-    same arrived dtype), with the read going through
-    :func:`read_parquet_memo`.
-
-    A separate function rather than a change to ``read_events``
-    because the registry's rule-2 window ledger is FUNCTION-level:
-    ``read_events`` feeds ~40 registered queries, and editing it would
-    force them all into one 50-slot driver window. Consumers adopt
-    this twin lineage-by-lineage as their window slots allow (r14:
-    the star family)."""
-    pin_naive_timestamp_semantics(spark)
-    df = read_parquet_memo(spark, f"{sf_dir}/events.parquet")
+    df = read_table(spark, sf_dir, "events")
     from pyspark.sql import functions as F
 
     dtype = dict(df.dtypes).get("ts")
@@ -259,7 +275,7 @@ def load_star_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES
 ) -> dict[str, DataFrame]:
     """Load the driver testdata tables for one scale factor."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+    return {name: read_table(spark, sf_dir, name) for name in names}
 
 
 def register_star_views(
@@ -275,6 +291,6 @@ def register_star_views(
         df = (
             read_events(spark, sf_dir)
             if name == "events"
-            else spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            else read_table(spark, sf_dir, name)
         )
         df.createOrReplaceTempView(name)

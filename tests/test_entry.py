@@ -38,23 +38,14 @@ def test_entry_runs_at_smoke_scale(spark):
 
 
 def test_bench_headline_names_are_declared():
-    """Every name bench.py times must resolve — registry first, the
-    staged-query map for implemented-but-not-yet-registered extras — so
-    a rename fails here, not as a silent 'not in registry' error row
-    mid-bench-run. Staged names must NOT shadow registry names."""
+    """Every name bench.py times must resolve in the registry, so a
+    rename fails here, not as a silent 'not in registry' error row
+    mid-bench-run."""
     import bench
 
     qs = entry_mod.queries()
-    staged = bench._staged_queries()
-    missing = [
-        n for n in bench.HEADLINE + bench.EXTRAS
-        if n not in qs and n not in staged
-    ]
+    missing = [n for n in bench.HEADLINE + bench.EXTRAS if n not in qs]
     assert not missing, missing
-    assert not set(staged) & set(qs), (
-        "staged queries now registered — remove from _staged_queries: "
-        f"{sorted(set(staged) & set(qs))}"
-    )
 
 
 def test_sql_surface_matches_dataframe_plan(spark):

@@ -29,6 +29,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from etl_with_s3__dynamodb_and_glue_spark import get_spark  # noqa: E402
 from etl_with_s3__dynamodb_and_glue_spark.operators import dedup  # noqa: E402
 from etl_with_s3__dynamodb_and_glue_spark.plans import llm_ops  # noqa: E402
+from etl_with_s3__dynamodb_and_glue_spark.sources.readers import (  # noqa: E402
+    read_table,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -49,7 +52,7 @@ def timed(label, fn, spark, reps=2):
 
 def main():
     spark = get_spark("profile-leakage-lsh")
-    docs = llm_ops._docs(spark, SF_DIR)
+    docs = read_table(spark, SF_DIR, "documents")
     # warm-up (JVM/codegen/footers)
     docs.limit(100).select(F.length("text")).write.format("noop").mode(
         "overwrite"

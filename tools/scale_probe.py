@@ -195,10 +195,8 @@ def gen_embeddings(n_vecs: int, out_dir: str) -> None:
 
 def _registry():
     import __spark_entry__ as entry_mod
-    import bench
 
-    # staged-but-unregistered queries (bench extras) probe too
-    return {**entry_mod.queries(), **bench._staged_queries()}
+    return entry_mod.queries()
 
 
 def _time_queries(
