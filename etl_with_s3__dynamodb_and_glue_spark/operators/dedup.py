@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..caching import unpersist_on_release
+from . import gates
 from .text import fingerprint, normalize
 
 
@@ -340,9 +341,9 @@ def minhash_near_dups(
     """
     if bands is None:
         bands = pick_bands(num_hashes, threshold)
-    # A split-adaptive repartition of this cache (operators/
-    # parallelism.py) was A/B'd in the r13 optimization round and
-    # REJECTED: interleaved best-of-3 read 0.74-0.86× (slower) at both
+    # A split-adaptive repartition of this cache (operators/gates.py)
+    # was A/B'd in the r13 optimization round and REJECTED:
+    # interleaved best-of-3 read 0.74-0.86× (slower) at both
     # thresholds — the pipeline's heavy stages already parallelize
     # through their own exchanges, so the extra exchange + 32-task
     # scheduling on ~10 small stages costs more than the one-task scan
@@ -615,10 +616,11 @@ def build_minhash_store(
     stage onto one core (r13 event-log probe: 1-task serve stages of
     3.4/3.1/3.5 s on a 32-core session). The fix is now SIZE-GATED
     instead of unconditional: when the Catalyst estimate says the
-    whole store is smaller than one 4 MB file-open charge per task
-    slot, repartition to ``defaultParallelism`` (bounded: < slots ×
-    4 MB moved once); otherwise write the frame's NATURAL layout —
-    a deployment-scale build keeps AQE's size-targeted partitioning
+    whole store is smaller than ``gates.MIN_BYTES_PER_SLOT`` (one 4 MB
+    file-open charge) per task slot, repartition to
+    ``defaultParallelism`` (bounded: < slots × 4 MB moved once);
+    otherwise write the frame's NATURAL layout — a deployment-scale
+    build keeps AQE's size-targeted partitioning
     and no longer pays an unconditional extra full shuffle, and a
     tiny store under a 200-partition default no longer lands as ~200
     near-empty files. On estimate failure the conservative branch is
@@ -627,27 +629,15 @@ def build_minhash_store(
     spark = docs.sparkSession
     frame = corpus_signature_frame(docs, text_col, id_col, num_hashes)
     slots = spark.sparkContext.defaultParallelism
-    try:
-        est = int(
-            frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate is best-effort
-        est = 0  # unknown → floor the layout at serving parallelism
-    if est < slots * (4 << 20):
+    est = gates.plan_bytes(frame)
+    # unknown → floor the layout at serving parallelism
+    if est is None or est < slots * gates.MIN_BYTES_PER_SLOT:
         frame = frame.repartition(slots)
     frame.write.mode("overwrite").option("compression", "zstd").parquet(path)
 
 
 def load_minhash_store(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-# Arrival token-set frames estimated above this stay out of the
-# serving join's broadcast (VERDICT r13 item 5): comfortably under the
-# 8 GB / 512M-row broadcast relation cap with room for the driver and
-# per-executor copies, while every sane ingest batch (the steady-state
-# serving shape) remains far below it and keeps the broadcast plan.
-_ARRIVAL_BROADCAST_MAX_BYTES = 512 << 20
 
 
 def minhash_near_dups_vs_store(
@@ -723,15 +713,13 @@ def minhash_near_dups_vs_store(
     # are batch-bounded (the left is the candidate-pruned store probe,
     # O(candidates); `a` is the batch), so the store still never
     # shuffles and never becomes a build side — the fallback path is
-    # pinned by the same plan test as the broadcast path.
-    try:
-        a_bytes = int(
-            a._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — unknown size must not OOM the driver
-        a_bytes = _ARRIVAL_BROADCAST_MAX_BYTES + 1
+    # pinned by the same plan test as the broadcast path. An unknown
+    # size must not OOM the driver: no broadcast.
+    a_bytes = gates.plan_bytes(a)
     maybe_bcast_a = (
-        F.broadcast(a) if a_bytes <= _ARRIVAL_BROADCAST_MAX_BYTES else a
+        F.broadcast(a)
+        if a_bytes is not None and a_bytes <= gates.ARRIVAL_BROADCAST_MAX_BYTES
+        else a
     )
     # candidate id-pairs (batch-bounded, four scalar columns) probe the
     # store's token sets; the arrival token sets then join on the
@@ -759,22 +747,6 @@ def minhash_near_dups_vs_store(
 
 
 # --- cluster resolution --------------------------------------------------
-
-
-# One task comfortably owns a few-million-edge union-find (2M
-# symmetrized long pairs ≈ 64 MB + dict overhead; measured well under
-# a second) — far below one executor's memory yet far above any
-# sf-scale pair graph. Billions-of-pairs crawls exceed it and take the
-# distributed loop. STRING-ID CAVEAT (ADVICE r10): the 64 MB estimate
-# assumes 8-byte long ids; with long string doc_ids the Python dict of
-# up to 4M symmetrized string entries can be ~an order of magnitude
-# larger (each Python str carries ~50 B object overhead plus the
-# bytes), concentrating memory pressure on the one executor task that
-# runs the local path. Still bounded — ~0.6 GB worst case at 2M edges
-# × 64-char ids against a multi-GB executor — but deployments keying
-# on long URLs/paths should lower ``local_max_edges`` at the call
-# site (every resolve path exposes it) or pre-hash ids to longs.
-CC_LOCAL_MAX_EDGES = 2_000_000
 
 
 def union_find_labels(edge_iter) -> dict:
@@ -843,7 +815,6 @@ def connected_components(
     vertices: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    local_max_edges: int = CC_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over near-dup pair output: (id, cluster_id)
     where cluster_id is the component's minimum vertex id.
@@ -888,23 +859,24 @@ def connected_components(
     a crawl's boilerplate chains stretch the dup graph.
     Vertices without any pair keep themselves as singleton clusters.
 
-    ADAPTIVE PATH CHOICE (late-r10): below ``local_max_edges`` the
-    whole fixpoint runs as ONE single-task union-find
-    (:func:`_local_components`) instead of the iterative loop — the
-    same runtime-statistic-driven replanning AQE applies to joins,
-    applied to iteration strategy. The deciding statistic is free:
-    ``edges_sym`` must materialize for the loop anyway (it is the
-    persisted, pre-partitioned join input), so counting it adds one
-    cached-scan job, not a recompute of the pair pipeline. The
+    ADAPTIVE PATH CHOICE (late-r10): below
+    ``gates.CC_LOCAL_MAX_EDGES`` edges the whole fixpoint runs as ONE
+    single-task union-find (:func:`_local_components`) instead of the
+    iterative loop — the same runtime-statistic-driven replanning AQE
+    applies to joins, applied to iteration strategy. The deciding
+    statistic is free: ``edges_sym`` must materialize for the loop
+    anyway (it is the persisted, pre-partitioned join input), so
+    counting it adds one cached-scan job, not a recompute of the pair
+    pipeline. The
     distributed loop's per-round floor is ~1 s of job latency
     regardless of edge count — six rounds of scheduling to label a
     186k-edge graph a single core handles in well under a second. The
-    threshold is sized to one task's comfortable working set (see
-    ``CC_LOCAL_MAX_EDGES``); a crawl-scale pair graph with billions of
-    edges exceeds it and iterates distributed, so the fast path never
-    trades away scale behavior — parity between both paths is
-    property-tested on random graphs (``tests/test_connected_components.py``
-    drives each path explicitly via ``local_max_edges``).
+    threshold is sized to one task's comfortable working set (see its
+    comment); a crawl-scale pair graph with billions of edges exceeds
+    it and iterates distributed, so the fast path never trades away
+    scale behavior — parity between both paths is property-tested on
+    random graphs (``tests/test_connected_components.py`` drives each
+    path explicitly by patching that constant).
     """
     edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # persisted UN-partitioned: the local path reads it straight into
@@ -917,10 +889,11 @@ def connected_components(
     try:
         # the decision statistic rides the persist the paths need
         # anyway; both directions are present, so edges = n_sym / 2.
-        # local_max_edges=0 disables the local path even on empty
-        # input — the tests use it to force the distributed loop.
+        # a cap of 0 disables the local path even on empty input —
+        # the tests use it to force the distributed loop.
         n_sym = edges_sym.count()
-        if local_max_edges > 0 and n_sym <= 2 * local_max_edges:
+        max_edges = gates.CC_LOCAL_MAX_EDGES
+        if max_edges > 0 and n_sym <= 2 * max_edges:
             labels = _local_components(edges_sym)
         else:
             labels = _pointer_jump_components(edges_sym, max_iterations)

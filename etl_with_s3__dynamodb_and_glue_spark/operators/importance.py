@@ -88,7 +88,7 @@ def hashed_feature_counts(
     # downstream weight/resample; '' tokenizes to [''] — one gram —
     # so the doc still scores and the "EVERY input doc" contract of
     # dsir_log_weights holds.
-    from .parallelism import ensure_scan_parallelism
+    from .gates import ensure_scan_parallelism
 
     # EXPRESSION MEMO (r14 construction-cost round): the exploded
     # feature expression is a pure function of (text_col,) — the
@@ -103,10 +103,10 @@ def hashed_feature_counts(
         toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
         feats = F.concat(toks, word_ngrams(toks, 2))
         _FEATURE_EXPR_MEMO[key] = feats
-    # Split-adaptive repartition (r13 opt round, operators/
-    # parallelism.py): the unigram+bigram explode and per-gram md5
-    # sit DIRECTLY on the corpus scan with no shuffle in between, so a
-    # one-file input runs the whole featurization on one core.
+    # Split-adaptive repartition (r13 opt round, operators/gates.py):
+    # the unigram+bigram explode and per-gram md5 sit DIRECTLY on the
+    # corpus scan with no shuffle in between, so a one-file input runs
+    # the whole featurization on one core.
     # Interleaved A/B at sf0.1 (r13):
     # doc_dsir_weights 3.50 → 2.29 s (1.53×). Value-safe here by
     # construction: everything between this exchange and the next one

@@ -41,7 +41,11 @@ import math  # noqa: F401 — mirrors similarity.py's helper imports
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import gates
+from .similarity import nearest_cells
 from .windows import top_k_per_group
+
+_ADC_SCHEMA = "query_id long, neighbor_id long, adc_cos double"
 
 
 def _require_numpy():
@@ -116,6 +120,41 @@ def _normalized(vec_col):
     return F.when(nrm == 0.0, vec_col).otherwise(
         F.transform(vec_col, lambda x: x / nrm)
     )
+
+
+def _query_batch(queries: DataFrame, vec_col: str, query_id_col: str):
+    """(query ids, (Q, dim) L2-normalized vectors) of a serving batch
+    collected under ``gates.SERVING_BATCH_MAX``, or None when empty."""
+    np = _require_numpy()
+    qrows = gates.collect_bounded(
+        queries.select(
+            F.col(query_id_col).alias("qid"),
+            _normalized(
+                F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            ).alias("qvec"),
+        ),
+        gates.SERVING_BATCH_MAX,
+    )
+    if not qrows:
+        return None
+    qids = np.array([r.qid for r in qrows])
+    return qids, np.stack([np.asarray(r.qvec) for r in qrows])
+
+
+def _adc_lut(books, qmat):
+    """(Q, m, k) ADC lookup table: LUT[q, j, c] = ||q_j - c||², the
+    squared distance from query q's j-th sub-vector to centroid c."""
+    np = _require_numpy()
+    m, kk, dsub = books.shape
+    lut = np.empty((len(qmat), m, kk))
+    for j in range(m):
+        sub = qmat[:, j * dsub : (j + 1) * dsub]  # (Q, dsub)
+        lut[:, j, :] = (
+            (sub**2).sum(axis=1, keepdims=True)
+            + (books[j] ** 2).sum(axis=1)[None, :]
+            - 2.0 * (sub @ books[j].T)
+        )
+    return lut
 
 
 def train_pq(
@@ -283,15 +322,14 @@ def pq_adc_topk(
     k: int = 5,
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    broadcast_queries_max: int = 10_000,
 ) -> DataFrame:
     """Approximate top-k per query by asymmetric distance over PQ codes.
 
     The query batch collects to the driver (bounded — this is a serving
-    batch, enforced by ``broadcast_queries_max``) and becomes one
-    (Q, m, k) float lookup table in the task closure: entry [q, j, c]
-    is the squared distance from query q's j-th sub-vector to centroid
-    c. Scoring a corpus code is then m byte-indexed gathers — no
+    batch of at most ``gates.SERVING_BATCH_MAX`` rows; a larger one
+    raises ``ValueError``) and becomes one (Q, m, k) float lookup table
+    in the task closure: entry [q, j, c] is the squared distance from
+    query q's j-th sub-vector to centroid c. Scoring a corpus code is then m byte-indexed gathers — no
     d-dim arithmetic, no raw vectors, no shuffle of the corpus. Each
     Arrow batch is pruned to its own top-k per query on the SAME key
     the global rank cut uses — (round(adc_cos, 6) desc, neighbor_id
@@ -308,41 +346,12 @@ def pq_adc_topk(
     np = _require_numpy()
     import pandas as pd
 
-    books = codebooks.codebooks
-    m, kk, dsub = books.shape
-
-    qrows = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            _normalized(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            ).alias("qvec"),
-        )
-        .limit(broadcast_queries_max + 1)
-        .collect()
-    )
-    if len(qrows) > broadcast_queries_max:
-        raise ValueError(
-            f"query batch exceeds broadcast_queries_max={broadcast_queries_max}; "
-            "ADC serves bounded query batches — split the batch or raise the cap"
-        )
-    if not qrows:
-        return encoded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_cos double"
-        )
-    qids = np.array([r.qid for r in qrows])
-    qmat = np.stack([np.asarray(r.qvec) for r in qrows])  # (Q, dim)
-    # LUT[q, j, c] = ||q_j - c||^2
-    lut = np.empty((len(qids), m, kk))
-    for j in range(m):
-        sub = qmat[:, j * dsub : (j + 1) * dsub]  # (Q, dsub)
-        lut[:, j, :] = (
-            (sub**2).sum(axis=1, keepdims=True)
-            + (books[j] ** 2).sum(axis=1)[None, :]
-            - 2.0 * (sub @ books[j].T)
-        )
-
-    out_schema = "query_id long, neighbor_id long, adc_cos double"
+    m = codebooks.m
+    batch = _query_batch(queries, vec_col, query_id_col)
+    if batch is None:
+        return encoded.sparkSession.createDataFrame([], _ADC_SCHEMA)
+    qids, qmat = batch
+    lut = _adc_lut(codebooks.codebooks, qmat)
 
     # Queries are scored in fixed-size chunks so the per-task distance
     # block is (chunk × arrow_batch) — bounded regardless of how large
@@ -391,7 +400,7 @@ def pq_adc_topk(
                         }
                     )
 
-    pruned = encoded.mapInPandas(_score, out_schema)
+    pruned = encoded.mapInPandas(_score, _ADC_SCHEMA)
     return top_k_per_group(
         pruned,
         group_by=["query_id"],
@@ -442,7 +451,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     n_probe: int = 3,
-    broadcast_queries_max: int = 10_000,
 ) -> DataFrame:
     """IVF-PQ (IVFADC without residual encoding): the IVF coarse
     quantizer prunes the corpus to each query's ``n_probe`` nearest
@@ -474,47 +482,17 @@ def ivf_pq_topk(
     np = _require_numpy()
     import pandas as pd
 
-    books = codebooks.codebooks
-    m, kk, dsub = books.shape
-
-    qrows = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            _normalized(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            ).alias("qvec"),
-        )
-        .limit(broadcast_queries_max + 1)
-        .collect()
-    )
-    if len(qrows) > broadcast_queries_max:
-        raise ValueError(
-            f"query batch exceeds broadcast_queries_max={broadcast_queries_max}; "
-            "ADC serves bounded query batches — split the batch or raise the cap"
-        )
-    if not qrows:
-        return encoded_assignments.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_cos double"
-        )
-    qids = np.array([r.qid for r in qrows])
-    qmat = np.stack([np.asarray(r.qvec) for r in qrows])
-    lut = np.empty((len(qids), m, kk))
-    for j in range(m):
-        sub = qmat[:, j * dsub : (j + 1) * dsub]
-        lut[:, j, :] = (
-            (sub**2).sum(axis=1, keepdims=True)
-            + (books[j] ** 2).sum(axis=1)[None, :]
-            - 2.0 * (sub @ books[j].T)
-        )
+    m = codebooks.m
+    batch = _query_batch(queries, vec_col, query_id_col)
+    if batch is None:
+        return encoded_assignments.sparkSession.createDataFrame([], _ADC_SCHEMA)
+    qids, qmat = batch
+    lut = _adc_lut(codebooks.codebooks, qmat)
     lut_by_qid = {int(q): lut[i] for i, q in enumerate(qids)}
 
     # nearest-centroid probe: one driver-side matmul over the already-
-    # collected query batch (same distance algebra as ivf_probe)
-    centers = index.centers
-    center_sq = (centers**2).sum(axis=1)
-    n_probe_eff = min(n_probe, len(centers))
-    dq = center_sq[None, :] - 2.0 * (qmat @ centers.T)
-    probe_idx = np.argsort(dq, axis=1, kind="stable")[:, :n_probe_eff]
+    # collected query batch (the same function ivf_probe uses)
+    probe_idx = nearest_cells(qmat, index.centers, n_probe)
     probed_rows = [
         (int(q), int(c)) for q, row in zip(qids, probe_idx) for c in row
     ]
@@ -536,8 +514,6 @@ def ivf_pq_topk(
     hit = encoded_assignments.filter(
         F.col("cluster").isin(probed_cells)
     ).select("neighbor_id", "code", "cluster")
-
-    out_schema = "query_id long, neighbor_id long, adc_cos double"
 
     def _score(batches):
         for pdf in batches:
@@ -573,50 +549,10 @@ def ivf_pq_topk(
                     }
                 )
 
-    scored = hit.mapInPandas(_score, out_schema)
+    scored = hit.mapInPandas(_score, _ADC_SCHEMA)
     return top_k_per_group(
         scored,
         group_by=["query_id"],
         order_by=[F.col("adc_cos").desc(), F.col("neighbor_id").asc()],
         k=k,
-    )
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    train_fraction: float = 1.0,
-    max_train_rows: int | None = 262_144,
-    max_iter: int = 5,
-) -> DataFrame:
-    """One-shot convenience: train → encode → ADC top-k. Deployments
-    should train/encode once (``train_pq`` + ``pq_encode``, persisting
-    both artifacts) and serve query batches against the stored codes;
-    IVF composition = run ``pq_encode`` on each IVF cluster partition
-    and ADC-score only the probed partitions."""
-    books = train_pq(
-        corpus,
-        vec_col=vec_col,
-        m=m,
-        k=n_codes,
-        dim=dim,
-        train_fraction=train_fraction,
-        max_train_rows=max_train_rows,
-        max_iter=max_iter,
-    )
-    encoded = pq_encode(books, corpus, id_col=id_col, vec_col=vec_col)
-    return pq_adc_topk(
-        books,
-        encoded,
-        queries,
-        k=k,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
     )

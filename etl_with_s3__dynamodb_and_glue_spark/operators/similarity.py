@@ -34,6 +34,7 @@ import random
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..caching import unpersist_on_release
+from . import gates
 from .windows import top_k_per_group
 
 
@@ -321,7 +322,6 @@ def lsh_topk(
     dim: int = 64,
     n_planes: int = 4,
     n_tables: int = 8,
-    broadcast_queries_max: int = 100_000,
 ) -> DataFrame:
     """Approximate top-k: union of ``n_tables`` independent SRP hash
     tables; candidates are bucket collisions in any table; exact
@@ -335,12 +335,9 @@ def lsh_topk(
     embeddings raise n_planes to tighten buckets.
 
     The query side is broadcast only while its row count stays within
-    ``broadcast_queries_max`` (probed with a LIMIT-bounded count, so
-    the check never scans past the threshold). The default keeps the
-    broadcast payload ≈ tens of MB at dim=64 (rows × dim × 8 B for the
-    vectors); a batch above it joins by shuffle instead — a forced
-    broadcast of an unbounded query batch is an executor OOM, and AQE
-    can still pick a runtime broadcast if actual sizes allow.
+    ``gates.LSH_BROADCAST_QUERIES_MAX`` (probed with a LIMIT-bounded
+    count, so the check never scans past the threshold); a batch above
+    it joins by shuffle instead.
     """
     c = corpus.selectExpr(
         f"`{id_col}` AS neighbor_id", f"{_as_double_sql(vec_col)} AS cvec"
@@ -348,11 +345,8 @@ def lsh_topk(
     q = queries.selectExpr(
         f"`{query_id_col}` AS query_id", f"{_as_double_sql(vec_col)} AS qvec"
     )
-    small_q = (
-        queries.limit(broadcast_queries_max + 1).count() <= broadcast_queries_max
-        if broadcast_queries_max > 0
-        else False
-    )
+    cap = gates.LSH_BROADCAST_QUERIES_MAX
+    small_q = cap > 0 and queries.limit(cap + 1).count() <= cap
     maybe_broadcast = F.broadcast if small_q else (lambda df: df)
 
     # Candidate generation carries ONLY ids through the explode/join:
@@ -579,6 +573,18 @@ def load_ivf_index(spark, path: str) -> IvfIndex:
     return IvfIndex(centers, assignments)
 
 
+def nearest_cells(qmat, centers, n_probe: int):
+    """(Q, min(n_probe, n_clusters)) indices of each query row's
+    nearest centroids, nearest first; the stable argsort resolves ties
+    to the lower cell id. Squared euclidean via ||q||² - 2q·c + ||c||²;
+    ||q||² is constant per row so it can't change the argsort — it is
+    dropped."""
+    import numpy as np
+
+    d = (centers**2).sum(axis=1)[None, :] - 2.0 * (qmat @ centers.T)
+    return np.argsort(d, axis=1, kind="stable")[:, : min(n_probe, len(centers))]
+
+
 def ivf_probe(
     index: IvfIndex,
     queries: DataFrame,
@@ -607,8 +613,9 @@ def ivf_probe(
     ``isin`` filter on the partition column: static file-index
     pruning, n_probe/n_clusters of the bytes actually read.
 
-    PROBE SIDE IS DRIVER-COMPUTED (r14): the query batch is broadcast
-    by contract — it already passes through the driver — so the
+    PROBE SIDE IS DRIVER-COMPUTED (r14): the query batch is a bounded
+    serving batch — collected through ``gates.collect_bounded``, which
+    raises above ``gates.SERVING_BATCH_MAX`` rows — so the
     nearest-centroid argsort runs ONCE in driver numpy over the
     collected batch, and the (query_id, qvec, cluster) probe rows ship
     as a literal local relation. The r13 shape paid three extra
@@ -627,12 +634,8 @@ def ivf_probe(
     q = queries.selectExpr(
         f"`{query_id_col}` AS query_id", f"{_as_double_sql(vec_col)} AS qvec"
     )
-    centers = index.centers
-    center_sq = (centers**2).sum(axis=1)
-    n_probe_eff = min(n_probe, len(centers))
-
     q_schema = q.schema
-    q_rows = q.collect()
+    q_rows = gates.collect_bounded(q, gates.SERVING_BATCH_MAX)
     spark = index.assignments.sparkSession
     if not q_rows:
         return spark.createDataFrame(
@@ -647,10 +650,7 @@ def ivf_probe(
             ),
         )
     v = np.array([r.qvec for r in q_rows])  # (batch, dim)
-    # squared euclidean via ||q||² - 2q·c + ||c||²; ||q||² is
-    # constant per row so it can't change the argsort — drop it
-    d = center_sq[None, :] - 2.0 * (v @ centers.T)
-    idx = np.argsort(d, axis=1, kind="stable")[:, :n_probe_eff].astype("int32")
+    idx = nearest_cells(v, index.centers, n_probe)
     probed_rows = [
         (r.query_id, r.qvec, int(cell))
         for r, cells in zip(q_rows, idx)

@@ -96,15 +96,6 @@ def word_ngram_hashes(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Character k-shingles of the normalized text (MinHash input)."""
-    text = normalize(col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
-        lambda i: F.substring(text, i, k),
-    )
-
-
 def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
@@ -148,12 +139,6 @@ def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return n_punct.cast("double") / F.greatest(F.length(c), F.lit(1))
-
-
-def digit_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_digit = F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", ""))
-    return n_digit.cast("double") / F.greatest(F.length(c), F.lit(1))
 
 
 def avg_token_len(toks: Column) -> Column:
@@ -363,13 +348,6 @@ def fingerprint(col: Column | str) -> Column:
     """Content fingerprint: md5 of the normalized text. md5 (not
     xxhash64) so external engines can reproduce it byte-for-byte."""
     return F.md5(normalize(col))
-
-
-def rolling_fingerprints(col: Column | str, window_tokens: int = 16) -> Column:
-    """Rolling document fingerprints: md5 per sliding token window —
-    the building block for fuzzy containment / plagiarism sweeps."""
-    grams = word_ngrams(tokens(col), window_tokens)
-    return F.transform(grams, F.md5)
 
 
 def chunk_tokens(

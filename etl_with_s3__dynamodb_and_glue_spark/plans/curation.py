@@ -942,11 +942,11 @@ def doc_dsir_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     with batch composition. The oracle replays the whole episode:
     split, corpus-side dense smoothed histograms, arrival
     featurization, threshold, and batch parity."""
-    from ..streaming import dsir_gate
+    from ..streaming.marker import read_batches
 
     decisions_dir = _ensure_dsir_decisions(spark, sf_dir) + "/decisions"
     return (
-        dsir_gate.read_decisions(spark, decisions_dir)
+        read_batches(spark, decisions_dir)
         .select(
             "doc_id",
             "n_feats",

@@ -25,13 +25,14 @@ the table.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 import threading
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
+
+from .readers import data_files
 
 
 def write_dataset(
@@ -68,18 +69,15 @@ def write_dataset(
 # --- build-once derived datasets -----------------------------------------
 
 # Process-lifetime registry of built derived datasets (IVF indexes,
-# serving layouts). Keyed on the INPUT files' identity (path, mtime,
-# size), not just their path, so a changed input triggers a rebuild
-# instead of serving a stale artifact. The on-disk artifacts are
-# session-independent: they survive SparkSession restarts within one
-# process and are removed at interpreter exit.
+# serving layouts). Keyed on each input's path and the (name, mtime,
+# size) of every data file under it (``readers.data_files``), not just
+# its path, so a changed input — a part file rewritten in place inside
+# a directory included — triggers a rebuild instead of serving a stale
+# artifact. The on-disk artifacts are session-independent: they
+# survive SparkSession restarts within one process and are removed at
+# interpreter exit.
 _DERIVED_DIRS: dict[tuple, str] = {}
 _DERIVED_LOCK = threading.Lock()
-
-
-def _input_fingerprint(path: str) -> tuple:
-    st = os.stat(path)
-    return (path, int(st.st_mtime_ns), st.st_size)
 
 
 def ensure_derived_dataset(
@@ -91,12 +89,12 @@ def ensure_derived_dataset(
 
     ``build(path)`` materializes the artifact into a fresh temp dir;
     the dir is cached for the life of the process under a key that
-    includes each input's (path, mtime, size) — the cheap O(1) staleness
-    check a real deployment would replace with a catalog snapshot id.
-    The build runs under a lock (concurrent callers wait, exactly one
+    includes each input's path and data-file (name, mtime, size) list —
+    the cheap staleness check a real deployment would replace with a
+    catalog snapshot id. The build runs under a lock (concurrent callers wait, exactly one
     builds) and every built dir is registered for removal at exit.
     """
-    key = (kind, *map(_input_fingerprint, input_paths))
+    key = (kind, *((p, data_files(p)) for p in input_paths))
     with _DERIVED_LOCK:
         path = _DERIVED_DIRS.get(key)
         if path is None:

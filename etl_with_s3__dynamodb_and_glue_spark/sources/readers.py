@@ -192,7 +192,7 @@ _INFERENCE_CONFS = (
 _SCHEMA_MEMO: dict[tuple, T.StructType] = {}
 
 
-def _data_files(path: str) -> tuple[tuple[str, int, int], ...]:
+def data_files(path: str) -> tuple[tuple[str, int, int], ...]:
     """Sorted (relative name, mtime_ns, size) of the files a parquet
     scan of ``path`` reads: the path itself when it is a file, else
     every file below it except the hidden/metadata ones Spark skips
@@ -225,7 +225,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = (
             path,
             tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
-            _data_files(path),
+            data_files(path),
         )
     except Exception:  # noqa: BLE001 — unlistable path or unknown conf
         return spark.read.parquet(path)

@@ -32,7 +32,7 @@ from ..operators.cms import D_ROWS, W_CELLS, cms_build, cms_estimate
 from .genstore import last_swapped_batch_id
 from .genstore import recover_store as _recover_store
 from .genstore import swap_in_generation
-from .marker import is_replay
+from .marker import is_replay, start_available_now
 
 CMS_SCHEMA = "j int, pos int, n long"
 
@@ -95,9 +95,8 @@ def cms_store_stream(
     """Maintain the frequency-sketch store from a keyed stream: each
     micro-batch sketches only its own rows; the store absorbs them by
     cell-wise sum."""
-    run_id = os.path.abspath(checkpoint_dir)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         merge_cms_batch(
             batch.sparkSession,
             batch,
@@ -109,12 +108,7 @@ def cms_store_stream(
             run_id=run_id,
         )
 
-    return (
-        keyed.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(keyed, checkpoint_dir, handle)
 
 
 def estimate_counts(

@@ -34,13 +34,11 @@ replayable.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import duplicate_spans_vs_store
-from .marker import is_replay, write_marker
+from .marker import is_replay, start_available_now, write_marker
 
 
 def tokens_leaked(findings: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -136,9 +134,8 @@ def decontam_gate_stream(
 ) -> StreamingQuery:
     """Run the gate over a document stream (columns: doc_id, text, …)
     against a prebuilt anchor store (``dedup.build_anchor_store``)."""
-    run_id = os.path.abspath(checkpoint_dir)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         screen_batch(
             batch,
             batch_id,
@@ -149,21 +146,4 @@ def decontam_gate_stream(
             run_id=run_id,
         )
 
-    return (
-        arrivals.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_findings(spark: SparkSession, findings_dir: str) -> DataFrame:
-    return spark.read.option("basePath", findings_dir).parquet(
-        f"{findings_dir}/batch_id=*"
-    )
-
-
-def read_decisions(spark: SparkSession, decisions_dir: str) -> DataFrame:
-    return spark.read.option("basePath", decisions_dir).parquet(
-        f"{decisions_dir}/batch_id=*"
-    )
+    return start_available_now(arrivals, checkpoint_dir, handle)

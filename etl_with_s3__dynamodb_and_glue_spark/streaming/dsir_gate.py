@@ -30,13 +30,11 @@ data-selection surface (SURVEY §2.8 extension family).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import importance
-from .marker import is_replay, write_marker
+from .marker import is_replay, start_available_now, write_marker
 
 
 def score_batch(
@@ -101,9 +99,8 @@ def dsir_gate_stream(
 ) -> StreamingQuery:
     """Run the gate over a document stream (columns: doc_id, text, …)
     against a prebuilt ratio store (``importance.build_dsir_store``)."""
-    run_id = os.path.abspath(checkpoint_dir)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         score_batch(
             batch,
             batch_id,
@@ -114,15 +111,4 @@ def dsir_gate_stream(
             run_id=run_id,
         )
 
-    return (
-        arrivals.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_decisions(spark: SparkSession, decisions_dir: str) -> DataFrame:
-    return spark.read.option("basePath", decisions_dir).parquet(
-        f"{decisions_dir}/batch_id=*"
-    )
+    return start_available_now(arrivals, checkpoint_dir, handle)

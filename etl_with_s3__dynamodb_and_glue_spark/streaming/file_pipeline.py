@@ -33,6 +33,7 @@ from ..plans import music_pipeline as mp
 from ..schemas import SONGS, STREAMS
 from ..sources.readers import read_csv
 from ..sources.sinks import KeyValueSink
+from .marker import start_available_now
 
 
 def stream_csv_source(
@@ -80,7 +81,7 @@ def run_streaming_episode(
     songs = mp.clean_songs(read_csv(spark, songs_path, SONGS), deterministic=True)
     stream = stream_csv_source(spark, streams_dir, STREAMS, archive_dir=archive_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, _run_id: str) -> None:
         enriched = mp.enrich(mp.clean_streams(batch_df), songs).persist()
         counts = mp.song_counts(enriched).persist()
         try:
@@ -91,12 +92,7 @@ def run_streaming_episode(
             counts.unpersist()
             enriched.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    query = start_available_now(stream, checkpoint_dir, process)
     finished = query.awaitTermination(timeout_sec)
     if not finished:
         # The episode boundary must be deterministic: callers treat the

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import (
@@ -41,7 +41,12 @@ from ..operators.dedup import (
     corpus_signature_frame,
     minhash_near_dups_vs_store,
 )
-from .marker import is_replay, last_batch_id, write_marker
+from .marker import (
+    is_replay,
+    last_batch_id,
+    start_available_now,
+    write_marker,
+)
 
 SEED_BATCH_ID = -1
 
@@ -141,9 +146,8 @@ def near_dup_ingest_stream(
     """Run the ingest gate over a document stream (columns: doc_id,
     text, ...). Each micro-batch is decided against every earlier
     generation of the store and extends it with its novel docs."""
-    run_id = os.path.abspath(checkpoint_dir)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         ingest_batch(
             batch,
             batch_id,
@@ -154,17 +158,4 @@ def near_dup_ingest_stream(
             run_id=run_id,
         )
 
-    return (
-        arrivals.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_decisions(spark: SparkSession, decisions_dir: str) -> DataFrame:
-    """The decision log across all batches (batch_id is the partition
-    column)."""
-    return spark.read.option("basePath", decisions_dir).parquet(
-        f"{decisions_dir}/batch_id=*"
-    )
+    return start_available_now(arrivals, checkpoint_dir, handle)

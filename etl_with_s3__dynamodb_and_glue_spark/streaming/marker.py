@@ -1,5 +1,8 @@
 """Run-scoped replay marker shared by the foreachBatch gates
-(``ingest_dedup``, ``vector_ingest``, ``decontam_gate``).
+(``ingest_dedup``, ``vector_ingest``, ``decontam_gate``), plus the one
+AvailableNow start every foreachBatch stream goes through
+(:func:`start_available_now`) and the one reader of landed
+``batch_id=N`` subtrees (:func:`read_batches`).
 
 The marker records the last FULLY-landed (run_id, batch_id) so an
 at-least-once replay of a landed batch short-circuits instead of
@@ -31,6 +34,10 @@ each hand-rolled (now in one place, ADVICE r7):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 MARKER_NAME = "_last_batch_id"
 
@@ -118,3 +125,29 @@ def is_replay(
         f"came from a different run ({run_id!r} vs "
         f"{marker_run or '<legacy unscoped>'!r}): {resume_hint}"
     )
+
+
+def start_available_now(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    handle: Callable[[DataFrame, int, str], None],
+) -> StreamingQuery:
+    """Start ``stream`` as one AvailableNow foreachBatch query.
+    ``handle(batch, batch_id, run_id)`` runs per micro-batch; run_id is
+    the checkpoint's absolute path — the run identity the replay
+    marker is scoped to."""
+    run_id = os.path.abspath(checkpoint_dir)
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: handle(batch, batch_id, run_id)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def read_batches(spark: SparkSession, root: str) -> DataFrame:
+    """Every ``batch_id=N`` subtree landed under ``root`` as one scan
+    (batch_id is the partition column)."""
+    return spark.read.option("basePath", root).parquet(f"{root}/batch_id=*")

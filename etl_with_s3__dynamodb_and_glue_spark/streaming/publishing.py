@@ -39,6 +39,7 @@ from ..sources.publish import (
     read_published,
     write_metadata,
 )
+from .marker import start_available_now
 
 _BATCH_KEY = "last_batch_id"
 _RUN_KEY = "run_id"
@@ -129,16 +130,8 @@ def rollup_publish_stream(
 ) -> StreamingQuery:
     """Maintain the published daily rollup from an events stream
     (columns: ts, event_type, value)."""
-    import os
 
-    run_id = os.path.abspath(checkpoint_dir)
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         fold_and_publish(batch, root, batch_id=batch_id, run_id=run_id)
 
-    return (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, checkpoint_dir, handle)

@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 from .genstore import last_swapped_batch_id
 from .genstore import recover_store as _recover_store
 from .genstore import swap_in_generation
-from .marker import is_replay
+from .marker import is_replay, start_available_now
 
 SKETCH_SCHEMA = "day date, user_sketch binary, n_events long"
 
@@ -111,9 +111,8 @@ def sketch_store_stream(
     """Maintain the per-day user-sketch store from an events stream
     (columns: ts, user_id). Each micro-batch touches only its own
     rows; the store absorbs them by sketch union."""
-    run_id = os.path.abspath(checkpoint_dir)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         merge_day_sketches(
             batch.sparkSession,
             batch,
@@ -122,12 +121,7 @@ def sketch_store_stream(
             run_id=run_id,
         )
 
-    return (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, checkpoint_dir, handle)
 
 
 def estimate_distinct_users(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.merge import apply_changes, scd1_merge
+from .marker import start_available_now
 
 DEFAULT_BUCKETS = 16
 
@@ -136,7 +137,7 @@ def state_table_stream(
     the same ``merge_state`` serves batch backfills. With ``op_col``
     the stream is a CDC op log (deletes included)."""
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, _run_id: str) -> None:
         merge_state(
             batch.sparkSession,
             batch,
@@ -147,9 +148,4 @@ def state_table_stream(
             op_col=op_col,
         )
 
-    return (
-        updates.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(updates, checkpoint_dir, handle)

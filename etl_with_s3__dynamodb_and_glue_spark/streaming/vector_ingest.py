@@ -31,14 +31,18 @@ provenance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.embedding_gen import embed_texts
 from ..operators.similarity import IvfIndex, ivf_assign
-from .marker import is_replay, last_batch_id, write_marker
+from .marker import (
+    is_replay,
+    last_batch_id,
+    read_batches,
+    start_available_now,
+    write_marker,
+)
 
 SEED_BATCH_ID = -1
 
@@ -90,10 +94,7 @@ def load_vector_index(spark: SparkSession, index_dir: str) -> IvfIndex:
     centers = np.array(
         [r.center for r in sorted(rows, key=lambda r: r.cluster)]
     )
-    assignments = spark.read.option(
-        "basePath", f"{index_dir}/assignments"
-    ).parquet(f"{index_dir}/assignments/batch_id=*")
-    return IvfIndex(centers, assignments)
+    return IvfIndex(centers, read_batches(spark, f"{index_dir}/assignments"))
 
 
 def ingest_vector_batch(
@@ -150,9 +151,7 @@ def vector_ingest_stream(
     """Run the ingest loop over a document stream (columns: doc_id,
     text, ...) against a seeded index."""
 
-    run_id = os.path.abspath(checkpoint_dir)
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
+    def handle(batch: DataFrame, batch_id: int, run_id: str) -> None:
         ingest_vector_batch(
             batch,
             batch_id,
@@ -164,9 +163,4 @@ def vector_ingest_stream(
             run_id=run_id,
         )
 
-    return (
-        arrivals.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(arrivals, checkpoint_dir, handle)

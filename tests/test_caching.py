@@ -48,8 +48,10 @@ def test_cache_deps_survive_when_only_result_is_referenced(spark):
 
 
 def test_derived_dataset_rebuilds_on_input_change(spark, tmp_path):
-    """ensure_derived_dataset is keyed on the input's (path, mtime,
-    size): same input → cached dir; touched input → fresh build."""
+    """ensure_derived_dataset is keyed on each input's data files
+    (name, mtime, size): same input → cached dir; a touched file input
+    or a part file rewritten in place inside a directory input → fresh
+    build."""
     from etl_with_s3__dynamodb_and_glue_spark.sources.dataset import (
         ensure_derived_dataset,
     )
@@ -70,6 +72,20 @@ def test_derived_dataset_rebuilds_on_input_change(spark, tmp_path):
     os.utime(src, (1, 1))  # same bytes, new mtime -> stale key
     p3 = ensure_derived_dataset("t_case", [str(src)], build)
     assert p3 != p1 and len(builds) == 2
+
+    # a directory's own stat does not change when a file inside it is
+    # rewritten in place
+    src_dir = tmp_path / "input_dir"
+    src_dir.mkdir()
+    part = src_dir / "part-0.parquet"
+    part.write_text("v1")
+    d1 = ensure_derived_dataset("t_dir", [str(src_dir)], build)
+    assert ensure_derived_dataset("t_dir", [str(src_dir)], build) == d1
+    dir_mtime = os.stat(src_dir).st_mtime_ns
+    part.write_text("v2-rewritten")
+    assert os.stat(src_dir).st_mtime_ns == dir_mtime
+    d2 = ensure_derived_dataset("t_dir", [str(src_dir)], build)
+    assert d2 != d1 and len(builds) == 4
 
 
 def test_operator_persists_do_not_outlive_results(spark):

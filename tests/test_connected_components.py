@@ -6,10 +6,12 @@ correct while converging in O(log diameter))."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from etl_with_s3__dynamodb_and_glue_spark.operators import gates
 from etl_with_s3__dynamodb_and_glue_spark.operators.dedup import (
     connected_components,
     union_find_labels,
@@ -37,7 +39,9 @@ def _union_find(n_vertices: int, edges: list[tuple[int, int]]) -> dict[int, int]
     return {v: comp_min[find(v)] for v in range(n_vertices)}
 
 
-def _spark_cc(spark, n_vertices: int, edges: list[tuple[int, int]], **kw):
+def _spark_cc(
+    spark, n_vertices: int, edges: list[tuple[int, int]], distributed=False
+):
     vertices = spark.range(n_vertices).select(F.col("id").alias("doc_id"))
     if edges:
         pairs = spark.createDataFrame(
@@ -47,8 +51,12 @@ def _spark_cc(spark, n_vertices: int, edges: list[tuple[int, int]], **kw):
         pairs = vertices.select(
             F.col("doc_id").alias("id_a"), F.col("doc_id").alias("id_b")
         ).limit(0)
-    out = connected_components(pairs, vertices, **kw)
-    return {r.doc_id: r.cluster_id for r in out.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if distributed:
+            # a cap of 0 forces the distributed pointer-jump loop
+            mp.setattr(gates, "CC_LOCAL_MAX_EDGES", 0)
+        out = connected_components(pairs, vertices)
+        return {r.doc_id: r.cluster_id for r in out.collect()}
 
 
 @settings(
@@ -72,10 +80,10 @@ def test_cc_matches_union_find_on_random_graphs(spark, n, data):
     edges = [(min(a, b), max(a, b)) for a, b in edges]
     want = _union_find(n, edges)
     # default: the adaptive choice takes the single-task union-find
-    # path at these sizes; local_max_edges=0 forces the distributed
-    # pointer-jump loop — BOTH must match the reference
+    # path at these sizes; distributed=True forces the pointer-jump
+    # loop — BOTH must match the reference
     assert _spark_cc(spark, n, edges) == want
-    assert _spark_cc(spark, n, edges, local_max_edges=0) == want
+    assert _spark_cc(spark, n, edges, distributed=True) == want
 
 
 @settings(max_examples=300, deadline=None)
@@ -114,21 +122,21 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     edges = [(i, i + 1) for i in range(n - 1)]
     # force the distributed loop: the log-round convergence claim is
     # about the pointer jump, not the local fast path
-    got = _spark_cc(spark, n, edges, local_max_edges=0)
+    got = _spark_cc(spark, n, edges, distributed=True)
     assert got == {v: 0 for v in range(n)}
     assert _spark_cc(spark, n, edges) == got
 
 
 def test_cc_singletons_only(spark):
-    for kw in ({}, {"local_max_edges": 0}):
-        got = _spark_cc(spark, 7, [], **kw)
+    for distributed in (False, True):
+        got = _spark_cc(spark, 7, [], distributed)
         assert got == {v: v for v in range(7)}
 
 
 def test_cc_two_cliques_and_isolates(spark):
     edges = [(0, 1), (1, 2), (0, 2), (4, 5)]
-    for kw in ({}, {"local_max_edges": 0}):
-        got = _spark_cc(spark, 7, edges, **kw)
+    for distributed in (False, True):
+        got = _spark_cc(spark, 7, edges, distributed)
         assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6}
 
 
@@ -175,7 +183,7 @@ def test_pointer_jump_retires_dead_round_checkpoints(spark):
     # 33-vertex path: converges in ~6 jump rounds, so without
     # retirement ~7 checkpoints would be left pinned
     edges = [(i, i + 1) for i in range(32)]
-    got = _spark_cc(spark, 33, edges, local_max_edges=0)
+    got = _spark_cc(spark, 33, edges, distributed=True)
     assert got == {v: 0 for v in range(33)}
     leftover = {
         int(i)

@@ -362,7 +362,7 @@ def test_store_serving_broadcast_fallback_rows_identical(spark, monkeypatch):
     """r14 (VERDICT r13 item 5): forcing the arrival-broadcast size
     gate to the shuffled-join fallback must not change a single
     serving row."""
-    from etl_with_s3__dynamodb_and_glue_spark.operators import dedup
+    from etl_with_s3__dynamodb_and_glue_spark.operators import gates
     from etl_with_s3__dynamodb_and_glue_spark.plans import llm_ops
     from tests.conftest import SF_ORACLE
 
@@ -370,7 +370,7 @@ def test_store_serving_broadcast_fallback_rows_identical(spark, monkeypatch):
         tuple(r)
         for r in llm_ops.doc_arrivals_dedup_store(spark, SF_ORACLE).collect()
     }
-    monkeypatch.setattr(dedup, "_ARRIVAL_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(gates, "ARRIVAL_BROADCAST_MAX_BYTES", 0)
     shuffled = {
         tuple(r)
         for r in llm_ops.doc_arrivals_dedup_store(spark, SF_ORACLE).collect()
@@ -1699,6 +1699,31 @@ def test_dsir_weights_matches_oracle(spark):
         DOC_DSIR_WEIGHTS_SQL,
     )
     assert res.get("values_match"), res
+
+
+def test_scan_parallelism_gate_branches_give_identical_counts(spark, monkeypatch):
+    """Both branches of gates.ensure_scan_parallelism: at sf0.001 the
+    default MIN_BYTES_PER_SLOT repartitions the one-file documents
+    scan, a threshold of 0 leaves it as is. The bucket counts are exact
+    integers, so the rows must be identical."""
+    import re
+
+    from etl_with_s3__dynamodb_and_glue_spark.operators import gates, importance
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+    def run():
+        df = importance.hashed_feature_counts(docs)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return bool(re.search(r"Repartition \d+, true", plan)), sorted(
+            map(tuple, df.collect())
+        )
+
+    repartitioned, rows = run()
+    monkeypatch.setattr(gates, "MIN_BYTES_PER_SLOT", 0)
+    kept, rows_kept = run()
+    assert repartitioned and not kept
+    assert rows_kept == rows and rows
 
 
 def test_dsir_weights_separate_target_language(spark):

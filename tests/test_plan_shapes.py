@@ -193,10 +193,11 @@ def test_lsh_topk_candidates_carry_ids_not_vectors(spark):
         assert "cvec" not in line and "qvec" not in line, line
 
 
-def test_lsh_topk_large_query_batch_not_forced_broadcast(spark):
-    """A query batch above broadcast_queries_max must NOT carry a
-    broadcast hint (a forced broadcast of an unbounded batch is an
-    executor OOM); results must match the broadcast path exactly."""
+def test_lsh_topk_large_query_batch_not_forced_broadcast(spark, monkeypatch):
+    """A query batch above gates.LSH_BROADCAST_QUERIES_MAX must NOT
+    carry a broadcast hint (a forced broadcast of an unbounded batch is
+    an executor OOM); results must match the broadcast path exactly."""
+    from etl_with_s3__dynamodb_and_glue_spark.operators import gates
     from etl_with_s3__dynamodb_and_glue_spark.operators.similarity import lsh_topk
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -206,10 +207,11 @@ def test_lsh_topk_large_query_batch_not_forced_broadcast(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuffled = lsh_topk(emb, queries, k=5, broadcast_queries_max=0)
-        assert "BroadcastHashJoin" not in plan_str(shuffled)
         hinted = lsh_topk(emb, queries, k=5)
         assert "BroadcastHashJoin" in plan_str(hinted)
+        monkeypatch.setattr(gates, "LSH_BROADCAST_QUERIES_MAX", 0)
+        shuffled = lsh_topk(emb, queries, k=5)
+        assert "BroadcastHashJoin" not in plan_str(shuffled)
         key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
         assert key(shuffled) == key(hinted)
     finally:
@@ -778,12 +780,12 @@ def test_store_serving_fallback_join_also_protects_the_store(spark, monkeypatch)
     fallback plan must satisfy the same contract as the broadcast
     plan: no exchange ever moves raw corpus-scale store rows, and the
     store is never a broadcast build side."""
-    from etl_with_s3__dynamodb_and_glue_spark.operators import dedup
+    from etl_with_s3__dynamodb_and_glue_spark.operators import gates
     from etl_with_s3__dynamodb_and_glue_spark.plans.llm_ops import (
         doc_arrivals_dedup_store,
     )
 
-    monkeypatch.setattr(dedup, "_ARRIVAL_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(gates, "ARRIVAL_BROADCAST_MAX_BYTES", 0)
     plan = plan_str(doc_arrivals_dedup_store(spark, SF_SMOKE), "simple")
     root = _parse_plan_tree(plan)
 

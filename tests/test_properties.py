@@ -479,10 +479,9 @@ def test_decontam_gate_batches_equal_one_shot_batch(spark, docs, ref, n_batches)
     from etl_with_s3__dynamodb_and_glue_spark.operators import dedup
     from etl_with_s3__dynamodb_and_glue_spark.streaming import marker
     from etl_with_s3__dynamodb_and_glue_spark.streaming.decontam_gate import (
-        read_decisions,
-        read_findings,
         screen_batch,
     )
+    from etl_with_s3__dynamodb_and_glue_spark.streaming.marker import read_batches
 
     L = 3
     texts = {i: " ".join(tk) for i, tk in enumerate(docs)}
@@ -517,11 +516,11 @@ def test_decontam_gate_batches_equal_one_shot_batch(spark, docs, ref, n_batches)
         def snap():
             f = sorted(
                 (r.doc_id, r.span_start, r.span_len, r.span_text)
-                for r in read_findings(spark, findings_dir).collect()
+                for r in read_batches(spark, findings_dir).collect()
             )
             d = sorted(
                 (r.doc_id, r.contaminated, r.n_spans, r.n_tokens_leaked)
-                for r in read_decisions(spark, decisions_dir).collect()
+                for r in read_batches(spark, decisions_dir).collect()
             )
             return f, d
 

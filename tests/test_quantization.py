@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_with_s3__dynamodb_and_glue_spark.operators import (
+    gates,
     quantization as Q,
     similarity as S,
 )
@@ -175,15 +176,40 @@ def test_staged_ivfpq_query_serves_and_prunes(spark):
     assert "PartitionFilters" in plan or "dynamicpruning" in plan.lower(), plan
 
 
-def test_query_cap_enforced(books, encoded, emb):
-    with pytest.raises(ValueError, match="broadcast_queries_max"):
-        Q.pq_adc_topk(
-            books,
-            encoded,
-            emb.withColumnRenamed("vec_id", "query_id"),
-            k=3,
-            broadcast_queries_max=10,
-        )
+_PROBES = {
+    "pq_adc_topk": lambda books, emb, ivf, q: Q.pq_adc_topk(
+        books, Q.pq_encode(books, emb), q, k=3
+    ),
+    "ivf_pq_topk": lambda books, emb, ivf, q: Q.ivf_pq_topk(
+        ivf, books, Q.pq_encode_ivf(books, ivf), q, k=3
+    ),
+    "ivf_probe": lambda books, emb, ivf, q: S.ivf_probe(ivf, q, k=3),
+}
+
+
+@pytest.fixture(scope="module")
+def ivf(emb):
+    return S.build_ivf_index(emb, n_clusters=8)
+
+
+@pytest.mark.parametrize("probe", sorted(_PROBES))
+def test_query_cap_enforced(probe, books, emb, ivf, monkeypatch):
+    """Every serving probe collects its query batch through
+    gates.collect_bounded: above SERVING_BATCH_MAX it raises, having
+    brought at most cap + 1 rows to the driver."""
+    monkeypatch.setattr(gates, "SERVING_BATCH_MAX", 10)
+    collected = []
+    real_collect = type(emb).collect
+
+    def spy(self):
+        rows = real_collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(emb), "collect", spy)
+    with pytest.raises(ValueError, match="SERVING_BATCH_MAX=10"):
+        _PROBES[probe](books, emb, ivf, emb.withColumnRenamed("vec_id", "query_id"))
+    assert collected and max(collected) <= 11
 
 
 def test_empty_query_batch(books, encoded, queries):

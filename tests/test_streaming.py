@@ -353,9 +353,9 @@ def test_near_dup_ingest_stream_matches_batch_composition(spark, tmp_path):
     from etl_with_s3__dynamodb_and_glue_spark.streaming.ingest_dedup import (
         ingest_batch,
         near_dup_ingest_stream,
-        read_decisions,
         seed_store,
     )
+    from etl_with_s3__dynamodb_and_glue_spark.streaming.marker import read_batches
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "text"
@@ -389,7 +389,7 @@ def test_near_dup_ingest_stream_matches_batch_composition(spark, tmp_path):
 
     got = {
         (r.doc_id, r.is_dup, r.dup_of, r.n_matches)
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     }
 
     # batch composition of the same two steps
@@ -426,7 +426,7 @@ def test_near_dup_ingest_stream_matches_batch_composition(spark, tmp_path):
     ingest_batch(arr1, 0, store_dir, decisions_dir, run_id=run_id)
     after = sorted(
         (r.doc_id, r.is_dup, r.dup_of, r.n_matches)
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     )
     assert after == before
 
@@ -597,10 +597,9 @@ def test_decontam_gate_stream_matches_batch_composition(spark, tmp_path):
     from etl_with_s3__dynamodb_and_glue_spark.operators import dedup
     from etl_with_s3__dynamodb_and_glue_spark.streaming.decontam_gate import (
         decontam_gate_stream,
-        read_decisions,
-        read_findings,
         screen_batch,
     )
+    from etl_with_s3__dynamodb_and_glue_spark.streaming.marker import read_batches
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "text"
@@ -634,7 +633,7 @@ def test_decontam_gate_stream_matches_batch_composition(spark, tmp_path):
 
     got_spans = sorted(
         (r.doc_id, r.span_start, r.span_len, r.span_text)
-        for r in read_findings(spark, findings_dir).collect()
+        for r in read_batches(spark, findings_dir).collect()
     )
     want_spans = sorted(
         (r.doc_id, r.span_start, r.span_len, r.span_text)
@@ -646,7 +645,7 @@ def test_decontam_gate_stream_matches_batch_composition(spark, tmp_path):
 
     decisions = {
         r.doc_id: (r.contaminated, r.n_spans, r.n_tokens_leaked)
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     }
     # one decision per arriving doc, clean docs included
     assert set(decisions) == {r.doc_id for r in train.collect()}
@@ -674,7 +673,7 @@ def test_decontam_gate_stream_matches_batch_composition(spark, tmp_path):
     screen_batch(arr1, 0, store, findings_dir, decisions_dir, run_id=run_id)
     after = sorted(
         (r.doc_id, (r.contaminated, r.n_spans, r.n_tokens_leaked))
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     )
     assert after == before
 
@@ -772,9 +771,9 @@ def test_dsir_gate_stream_matches_store_scoring(spark, tmp_path):
     from etl_with_s3__dynamodb_and_glue_spark.operators import importance
     from etl_with_s3__dynamodb_and_glue_spark.streaming.dsir_gate import (
         dsir_gate_stream,
-        read_decisions,
         score_batch,
     )
+    from etl_with_s3__dynamodb_and_glue_spark.streaming.marker import read_batches
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     store = str(tmp_path / "ratio_store")
@@ -807,7 +806,7 @@ def test_dsir_gate_stream_matches_store_scoring(spark, tmp_path):
 
     got = {
         r.doc_id: (r.n_feats, r.log_weight, r.admitted)
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     }
     want = {
         r.doc_id: (r.n_feats, r.log_weight)
@@ -832,7 +831,7 @@ def test_dsir_gate_stream_matches_store_scoring(spark, tmp_path):
     )
     after = {
         r.doc_id: r.admitted
-        for r in read_decisions(spark, decisions_dir).collect()
+        for r in read_batches(spark, decisions_dir).collect()
     }
     assert after == {d: a for d, (_, _, a) in got.items()}
 
