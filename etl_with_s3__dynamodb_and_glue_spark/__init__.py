@@ -1,6 +1,6 @@
 """PySpark-native analytics engine with the query and data-processing
 capabilities of the reference ETL system (Ann-Vanessa2/ETL-with-S3--DynamoDB-and-Glue,
-surveyed in /root/repo/SURVEY.md), re-expressed Spark-first.
+surveyed in SURVEY.md), re-expressed Spark-first.
 
 Layout
 ------

@@ -19,7 +19,7 @@ from __future__ import annotations
 import logging
 import time
 from collections.abc import Callable
-from typing import Any, TypeVar
+from typing import TypeVar
 
 logger = logging.getLogger(__name__)
 
@@ -65,27 +65,3 @@ def with_retries(
             sleep(delay)
             delay *= backoff
 
-
-def run_batch_episode_with_retries(
-    spark: Any,
-    users_path: str,
-    songs_path: str,
-    streams_path: str,
-    sink: Any,
-    archive_root: str | None = None,
-    retries: int = DEFAULT_RETRIES,
-    delay_sec: float = DEFAULT_DELAY_SEC,
-    sleep: Callable[[float], None] = time.sleep,
-) -> dict[str, int]:
-    """``plans.music_pipeline.run_batch_episode`` under the reference's
-    retry policy (C2 in SURVEY.md §2)."""
-    from .plans.music_pipeline import run_batch_episode
-
-    return with_retries(
-        lambda: run_batch_episode(
-            spark, users_path, songs_path, streams_path, sink, archive_root
-        ),
-        retries=retries,
-        delay_sec=delay_sec,
-        sleep=sleep,
-    )

@@ -13,6 +13,7 @@ import math
 import sys
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
@@ -89,7 +90,7 @@ def compare(spark, sf_dir: str, name: str, query_fn, sql: str | None):
 
 
 def main():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as e
     from etl_with_s3__dynamodb_and_glue_spark import get_spark
 

@@ -13,10 +13,11 @@ from __future__ import annotations
 import re
 
 import __spark_entry__ as entry_mod
+from tests.conftest import ROOT
 
 
 def test_coverage_doc_matches_registry():
-    text = open("/root/repo/COVERAGE.md").read()
+    text = (ROOT / "COVERAGE.md").read_text()
     names = set(entry_mod.queries())
     mentioned = set()
     for span in re.findall(r"`([^`]+)`", text):

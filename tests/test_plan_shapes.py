@@ -98,6 +98,9 @@ def test_serving_lookup_prunes_to_one_partition(spark):
     assert "date" in pf_line and "[]" not in pf_line
     # the top-5 must be a TakeOrdered, not a global sort shuffle
     assert "TakeOrderedAndProject" in plan
+
+
+def test_as_of_join_is_one_shuffle_no_join(spark):
     left = read_events(spark, SF_SMOKE).select(
         "user_id", F.col("ts").alias("t"), "event_id"
     )

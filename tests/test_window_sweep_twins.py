@@ -61,9 +61,6 @@ def _exact_pair_callers() -> set[str]:
 
 
 def test_exact_twins_list_matches_the_code():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.window_sweep import EXACT_TWINS
 
     callers = _exact_pair_callers()
