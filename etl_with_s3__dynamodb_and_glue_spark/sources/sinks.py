@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame
 
 
 class KeyValueSink:
-    """Upsert-by-key table writer."""
+    """Upsert-by-key table writer. ``write`` may be called for
+    different tables from several threads at once."""
 
     def write(self, df: DataFrame, table: str, key: str) -> None:
         raise NotImplementedError
@@ -34,7 +35,10 @@ class ParquetKeyValueSink(KeyValueSink):
     ``partitionOverwriteMode=dynamic`` makes the write an upsert at
     partition granularity — only the partitions present in ``df`` are
     replaced, matching the reference's overwrite-by-key behavior when
-    a late file re-triggers the pipeline (SURVEY.md §2.8).
+    a late file re-triggers the pipeline (SURVEY.md §2.8). It is a
+    writer option, not a session setting: later overwrites in the same
+    session keep Spark's static default, and concurrent writes of
+    different tables share no mutable state.
     """
 
     def __init__(self, base_dir: str):
@@ -42,12 +46,8 @@ class ParquetKeyValueSink(KeyValueSink):
 
     def write(self, df: DataFrame, table: str, key: str) -> None:
         (
-            df.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        )
-        (
             df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(key)
             .parquet(f"{self.base_dir}/{table}")
         )

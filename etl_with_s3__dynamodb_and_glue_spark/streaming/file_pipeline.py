@@ -85,9 +85,15 @@ def run_streaming_episode(
         enriched = mp.enrich(mp.clean_streams(batch_df), songs).persist()
         counts = mp.song_counts(enriched).persist()
         try:
-            sink.write(mp.genre_kpis(enriched), "GenreKPIs", key="date")
-            sink.write(mp.top_songs(counts), "TopSongs", key="date")
-            sink.write(mp.top_genres_compat(counts), "TopGenres", key="date")
+            mp.write_tables(
+                batch_df.sparkSession,
+                sink,
+                {
+                    "GenreKPIs": mp.genre_kpis(enriched),
+                    "TopSongs": mp.top_songs(counts),
+                    "TopGenres": mp.top_genres_compat(counts),
+                },
+            )
         finally:
             counts.unpersist()
             enriched.unpersist()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_with_s3__dynamodb_and_glue_spark.plans import music_pipeline as mp
@@ -36,12 +37,75 @@ def test_batch_episode_end_to_end(spark, tmp_path):
     kpis = spark.read.parquet(str(out / "GenreKPIs"))
     one_day = kpis.filter("date = '2024-06-25'")
     assert one_day.count() > 0
-    assert "PartitionFilters: [isnotnull(date" in one_day._jdf.queryExecution().toString() or True
+    assert "PartitionFilters: [isnotnull(date" in one_day._jdf.queryExecution().toString()
 
     # archive moved every stream file, preserving names, source emptied
     archived = list(archive.rglob("*.csv"))
     assert len(archived) == 6
     assert not list(Path(paths["streams"]).rglob("*.csv"))
+
+
+def test_batch_episode_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The concurrent table writes inherit the caller's job group, by
+    which a caller counts or cancels the episode's jobs."""
+    paths = generate(tmp_path / "music")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener_bus = sc._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("batch-episode", "one episode")
+    try:
+        mp.run_batch_episode(
+            spark, paths["users"], paths["songs"], paths["streams"], ParquetKeyValueSink(str(tmp_path / "wh"))
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    listener_bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("batch-episode")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+class _FailingSink(ParquetKeyValueSink):
+    def write(self, df, table, key):
+        if table == "TopSongs":
+            raise RuntimeError("TopSongs sink down")
+        super().write(df, table, key)
+
+
+def test_batch_episode_failed_write_keeps_inputs_and_frees_caches(spark, tmp_path):
+    """One failed table write fails the episode after the other writes
+    finish: nothing is archived and the shared caches are released."""
+    paths = generate(tmp_path / "music")
+    streams = sorted(Path(paths["streams"]).rglob("*.csv"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = set(persisted().keys())
+    with pytest.raises(RuntimeError, match="TopSongs sink down"):
+        mp.run_batch_episode(
+            spark,
+            paths["users"],
+            paths["songs"],
+            paths["streams"],
+            _FailingSink(str(tmp_path / "wh")),
+            archive_root=str(tmp_path / "archive"),
+        )
+    assert sorted(Path(paths["streams"]).rglob("*.csv")) == streams
+    assert not (tmp_path / "archive").exists()
+    assert set(persisted().keys()) <= before
+    assert (tmp_path / "wh" / "GenreKPIs").is_dir() and (tmp_path / "wh" / "TopGenres").is_dir()
+
+
+def test_parquet_sink_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic overwrite is the sink's writer option; the session's
+    setting, which every other overwrite in the session reads, stays."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(conf)
+    default = spark.conf.get(conf)
+    df = spark.createDataFrame([("2024-06-25", 1)], "date string, n int")
+    ParquetKeyValueSink(str(tmp_path / "kv")).write(df, "t", key="date")
+    assert spark.conf.get(conf) == default
 
 
 def test_parquet_sink_upsert_by_key(spark, tmp_path):

@@ -3,6 +3,8 @@ metrics (C6)."""
 
 from __future__ import annotations
 
+import gzip
+
 import pytest
 
 from etl_with_s3__dynamodb_and_glue_spark.functions.metrics import with_stage_metrics
@@ -33,6 +35,35 @@ def test_require_csv_columns(spark, tmp_path):
 def test_require_csv_columns_no_files(spark, tmp_path):
     with pytest.raises(ValidationError, match="no readable CSV"):
         require_csv_columns(spark, str(tmp_path / "absent"), ["a"], "t")
+
+
+def test_require_csv_columns_checks_every_file(spark, tmp_path):
+    """A folder read takes its column names from one file only, so a
+    later file without a required column must fail validation by name
+    rather than land with shifted columns."""
+    streams = tmp_path / "streams"
+    streams.mkdir()
+    (streams / "streams1.csv").write_text("user_id,track_id,listen_time\n1,t1,2024-06-25 10:00:00\n")
+    (streams / "streams2.csv").write_text("user_id,listen_time\n2,2024-06-25 11:00:00\n")
+    with pytest.raises(ValidationError, match=r"streams2\.csv missing required columns \['track_id'\]"):
+        require_csv_columns(spark, str(streams), ["user_id", "track_id", "listen_time"], "streams")
+
+
+def test_require_csv_columns_glob_hidden_and_quoted(spark, tmp_path):
+    """Globs resolve like Spark's reader: hidden and ``_`` files are not
+    data, empty files carry no header, compressed files are decoded and
+    quoted names parse as CSV."""
+    d = tmp_path / "in"
+    (d / "day=1").mkdir(parents=True)
+    (d / "day=1" / "a.csv").write_text('"user_id","user, name"\n1,x\n')
+    (d / "day=1" / "b.csv.gz").write_bytes(gzip.compress(b'user_id,"user, name",extra\n2,y,z\n'))
+    (d / "day=1" / "empty.csv").write_text("")
+    (d / "day=1" / ".a.csv.crc").write_text("garbage\n")
+    (d / "_SUCCESS").write_text("nothing\n")
+    for path in (str(d), f"{d}/day=*/*.csv"):
+        require_csv_columns(spark, path, ["user_id", "user, name"], "users")
+    with pytest.raises(ValidationError, match="no readable CSV"):
+        require_csv_columns(spark, f"{d}/day=*/empty.csv", ["user_id"], "users")
 
 
 def test_require_nonempty(spark):
