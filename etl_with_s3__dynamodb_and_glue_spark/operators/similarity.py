@@ -486,12 +486,15 @@ class IvfIndex:
         self.assignments = assignments
 
     def write(self, path: str) -> "IvfIndex":
-        import numpy as np  # noqa: F401
-
         spark = self.assignments.sparkSession
+        # a streaming-grown index (streaming/vector_ingest.py) carries an
+        # ingestion-generation column and nests cluster under it
+        partitions = [
+            c for c in ("batch_id", "cluster") if c in self.assignments.columns
+        ]
         (
             self.assignments.write.mode("overwrite")
-            .partitionBy("cluster")
+            .partitionBy(*partitions)
             .parquet(f"{path}/assignments")
         )
         centroid_rows = [

@@ -154,8 +154,6 @@ def run_pipeline(
     users_path: str,
     songs_path: str,
     streams_path: str,
-    deterministic: bool = True,
-    validate: bool = True,
 ) -> MusicPipelineResult:
     """End-to-end batch pipeline over CSV inputs.
 
@@ -165,19 +163,16 @@ def run_pipeline(
     (SURVEY.md Q5). Callers write the three outputs, then call
     ``unpersist_all``.
     """
-    if validate:
-        require_csv_columns(spark, users_path, REQUIRED_COLUMNS["users"], "users")
-        require_csv_columns(spark, songs_path, REQUIRED_COLUMNS["songs"], "songs")
-        require_csv_columns(spark, streams_path, REQUIRED_COLUMNS["streams"], "streams")
+    require_csv_columns(spark, users_path, REQUIRED_COLUMNS["users"], "users")
+    require_csv_columns(spark, songs_path, REQUIRED_COLUMNS["songs"], "songs")
+    require_csv_columns(spark, streams_path, REQUIRED_COLUMNS["streams"], "streams")
 
     songs = read_csv(spark, songs_path, SONGS)
     streams = read_csv(spark, streams_path, STREAMS)
-
-    if validate:
-        require_nonempty(streams, "streams")
+    require_nonempty(streams, "streams")
 
     enriched = enrich(
-        clean_streams(streams), clean_songs(songs, deterministic=deterministic)
+        clean_streams(streams), clean_songs(songs, deterministic=True)
     ).persist(StorageLevel.MEMORY_AND_DISK)
     counts = song_counts(enriched).persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -24,8 +24,10 @@ Crash safety, by construction: the pointer is only ever replaced via
 write-temp-then-``os.replace`` AFTER the version directory is fully
 written and audited. A crash at ANY point leaves either the old
 pointer (old snapshot intact) or the new pointer (new snapshot fully
-written) — never an in-between. Same swap discipline as the
-streaming sketch store (streaming/sketches.py).
+written) — never an in-between. The streaming whole-store
+maintainers (HLL sketches, CMS, daily rollup) commit through this
+module too (streaming/publishing.py), with their replay marker in the
+version's ``_METADATA``.
 
 Single-writer contract: concurrent publishers would race the version
 counter (this module has readers/writer isolation, not writer/writer
@@ -177,9 +179,9 @@ def read_metadata(root: str, version: int | None = None) -> dict:
 def write_metadata(root: str, version: int, metadata: dict) -> None:
     """Atomically replace ``version``'s metadata sidecar. The version's
     DATA stays immutable — this exists for metadata-only adoptions
-    (e.g. the streaming publisher stamping its run_id onto a legacy
-    snapshot after resolving an at-the-folded-id replay, the WAP
-    analogue of marker.py rewriting a legacy marker run-scoped)."""
+    (the streaming fold stamping its run_id onto a legacy snapshot
+    after resolving an at-the-folded-id replay, the WAP analogue of
+    marker.py rewriting a legacy marker run-scoped)."""
     path = os.path.join(_version_dir(root, version), "_METADATA")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:

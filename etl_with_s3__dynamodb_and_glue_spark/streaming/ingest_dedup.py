@@ -41,18 +41,9 @@ from ..operators.dedup import (
     corpus_signature_frame,
     minhash_near_dups_vs_store,
 )
-from .marker import (
-    is_replay,
-    last_batch_id,
-    start_available_now,
-    write_marker,
-)
+from .marker import is_replay, start_available_now, write_marker
 
 SEED_BATCH_ID = -1
-
-
-def last_ingested_batch_id(store_dir: str) -> int | None:
-    return last_batch_id(store_dir)
 
 
 def _store_generations(store_dir: str) -> list[int]:

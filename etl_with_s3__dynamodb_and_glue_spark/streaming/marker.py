@@ -1,13 +1,16 @@
-"""Run-scoped replay marker shared by the foreachBatch gates
-(``ingest_dedup``, ``vector_ingest``, ``decontam_gate``), plus the one
-AvailableNow start every foreachBatch stream goes through
+"""Run-scoped replay guard shared by every foreachBatch writer, plus
+the one AvailableNow start every foreachBatch stream goes through
 (:func:`start_available_now`) and the one reader of landed
 ``batch_id=N`` subtrees (:func:`read_batches`).
 
-The marker records the last FULLY-landed (run_id, batch_id) so an
+The guard records the last FULLY-landed (run_id, batch_id) so an
 at-least-once replay of a landed batch short-circuits instead of
-re-running its writes. Contract details the three gates previously
-each hand-rolled (now in one place, ADVICE r7):
+re-running its writes. :func:`replays` is the one truth table; it
+reads the recorded pair from wherever the store keeps it — the
+``_last_batch_id`` file marker of the per-batch-subtree gates
+(``ingest_dedup``, ``vector_ingest``, ``decontam_gate``, ``dsir_gate``,
+via :func:`is_replay`) or the ``_METADATA`` of a WAP-published store
+(``publishing.fold_into_published``). Contract details:
 
 - **Atomic writes** (temp file + ``os.replace``): a crash mid-write can
   no longer leave a truncated marker that poisons every later batch.
@@ -15,13 +18,14 @@ each hand-rolled (now in one place, ADVICE r7):
   writer, killed mid-write) reads as ABSENT — the worst case is one
   redundant re-run of an idempotent batch (every gate lands per-batch
   ``batch_id=N`` subtrees with overwrite), which beats failing forever.
-- **Legacy single-line markers** (pre run-scoping, no run_id line)
-  carry no run identity, so the replay check discriminates on the
-  batch_id instead: the original checkpoint resuming after an upgrade
-  replays AT the landed batch_id (at-least-once redelivery of the last
-  landed batch — the safe-resume scenario, skipped and the marker
-  rewritten run-scoped), while a fresh checkpoint renumbering from 0
-  regresses BELOW it (raises, same as a scoped cross-run regression).
+- **Legacy records** (pre run-scoping: a single-line marker, or a
+  snapshot's metadata without a run_id) carry no run identity, so the
+  replay check discriminates on the batch_id instead: the original
+  checkpoint resuming after an upgrade replays AT the landed batch_id
+  (at-least-once redelivery of the last landed batch — the safe-resume
+  scenario, skipped and the record rewritten run-scoped), while a
+  fresh checkpoint renumbering from 0 regresses BELOW it (raises, same
+  as a scoped cross-run regression).
   The single ambiguous residual — landed == 0 and a fresh run's batch
   0 — is irreducible without a recorded run and resolves to skip.
 - **Cross-run regression fails loudly**: a batch_id at or below the
@@ -78,15 +82,6 @@ def read_marker(state_dir: str) -> tuple[str, int] | None:
         ) from exc
 
 
-def last_batch_id(state_dir: str) -> int | None:
-    """Batch id of the last fully-landed batch, or None — the shared
-    accessor behind every gate's ``last_*_batch_id``. Generation-swap
-    stores must heal their crash windows before reading; they go
-    through ``genstore.last_swapped_batch_id`` instead."""
-    marker = read_marker(state_dir)
-    return None if marker is None else marker[1]
-
-
 def write_marker(state_dir: str, run_id: str, batch_id: int) -> None:
     """Atomically record (run_id, batch_id): temp file + os.replace so
     a crash leaves either the old marker or the new one, never a
@@ -98,33 +93,44 @@ def write_marker(state_dir: str, run_id: str, batch_id: int) -> None:
     os.replace(tmp, path)
 
 
-def is_replay(
-    state_dir: str, run_id: str, batch_id: int, resume_hint: str
+def replays(
+    recorded: tuple[str, int] | None,
+    run_id: str,
+    batch_id: int,
+    resume_hint: str,
 ) -> bool:
-    """True → this batch already landed (skip it). Raises on a
-    cross-run batch_id regression; ``resume_hint`` names the gate's
-    safe recovery in the error message."""
-    marker = read_marker(state_dir)
-    if marker is None or batch_id > marker[1]:
+    """The replay truth table, a pure function of the ``recorded``
+    (run_id, batch_id) of the last landed batch: True → this batch
+    already landed (skip it). Raises on a cross-run batch_id
+    regression; ``resume_hint`` names the store's safe recovery in the
+    error message.
+
+    A skip whose recorded run differs from ``run_id`` is a legacy
+    adoption (module doc): the caller re-records the landed id under
+    ``run_id`` so the next comparison is properly scoped."""
+    if recorded is None or batch_id > recorded[1]:
         return False
-    marker_run, landed = marker
-    if marker_run == run_id:
-        return True
-    if marker_run == "" and batch_id == landed:
-        # Pre-run-scoping marker, replay AT the landed id: the
-        # original checkpoint's at-least-once redelivery of its last
-        # landed batch (the safe-resume scenario). Adopt it under the
-        # current run_id so the next comparison is properly scoped. A
-        # legacy batch_id BELOW the landed one falls through to the
-        # raise — that is a fresh checkpoint renumbering from 0, and
-        # skipping would silently drop its batches.
-        write_marker(state_dir, run_id, landed)
+    recorded_run, landed = recorded
+    if recorded_run == run_id or (recorded_run == "" and batch_id == landed):
         return True
     raise ValueError(
         f"batch_id {batch_id} regressed below the landed {landed} but "
         f"came from a different run ({run_id!r} vs "
-        f"{marker_run or '<legacy unscoped>'!r}): {resume_hint}"
+        f"{recorded_run or '<legacy unscoped>'!r}): {resume_hint}"
     )
+
+
+def is_replay(
+    state_dir: str, run_id: str, batch_id: int, resume_hint: str
+) -> bool:
+    """:func:`replays` against the file marker in ``state_dir``,
+    rewriting an adopted legacy marker run-scoped."""
+    marker = read_marker(state_dir)
+    if not replays(marker, run_id, batch_id, resume_hint):
+        return False
+    if marker[0] != run_id:
+        write_marker(state_dir, run_id, marker[1])
+    return True
 
 
 def start_available_now(

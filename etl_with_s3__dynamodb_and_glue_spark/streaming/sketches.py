@@ -14,25 +14,19 @@ arrival.
 the store is a queryable table between batches, merge semantics are by
 sketch-union not row-overwrite, and the same code path serves batch
 backfills. The store itself is metrics-sized (one row per day: a date,
-a few-KB sketch, a count) so the read-merge-rewrite cycle costs
-nothing next to the batch scan; the merged rows pass through the
-driver only because parquet cannot be atomically self-overwritten —
-same trade as the IVF centroid load (similarity.py).
+a few-KB sketch, a count) so the fold-and-publish cycle
+(``publishing.fold_into_published`` — WAP versions, replay guard in
+the published metadata) costs nothing next to the batch scan.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .genstore import last_swapped_batch_id
-from .genstore import recover_store as _recover_store
-from .genstore import swap_in_generation
-from .marker import is_replay, start_available_now
-
-SKETCH_SCHEMA = "day date, user_sketch binary, n_events long"
+from ..sources.publish import read_published
+from .marker import start_available_now
+from .publishing import fold_into_published
 
 
 def _day_sketches(events: DataFrame) -> DataFrame:
@@ -42,67 +36,30 @@ def _day_sketches(events: DataFrame) -> DataFrame:
     )
 
 
-def last_merged_batch_id(store_dir: str) -> int | None:
-    """Heal-first read (a crash mid-swap leaves the marker in
-    ``<store>.old``) — NOT pure: delegates to
-    ``genstore.last_swapped_batch_id``, which mutates the store
-    directory and assumes the single-writer contract; readonly
-    pollers against a live stream should use ``marker.last_batch_id``
-    (see the genstore docstring)."""
-    return last_swapped_batch_id(store_dir)
-
-
 def merge_day_sketches(
     spark: SparkSession,
     batch: DataFrame,
     store_dir: str,
     batch_id: int | None = None,
     run_id: str = "",
-) -> None:
-    """Merge one batch's per-day sketches into the persisted store:
+) -> int | None:
+    """Merge one batch's per-day sketches into the published store:
     union-by-day of (existing ∪ batch) via ``hll_union_agg``. Works
-    for the first batch (empty store) and for backfills alike.
-
-    Replay-safe under foreachBatch's at-least-once contract: the store
-    records the last merged (run_id, batch_id) — the shared
-    ``streaming/marker.py`` contract, written INSIDE the swapped dir so
-    marker and data move atomically together (there is no lost-marker
-    window at all, unlike the per-batch-subtree gates) — and a batch
-    at or below it from the SAME run is skipped: HLL union is
-    idempotent but the ``n_events`` sum is not, so a replayed batch
-    must not merge twice, and a regressed batch_id from a DIFFERENT
-    run (fresh checkpoint renumbering from 0 against a store another
-    run built) fails loudly instead of silently dropping the merge.
-    Crash-safe: the old generation is set aside by rename and deleted
-    only after the new one is promoted; every intermediate state is
-    recoverable (:func:`_recover_store`), and the store is never
-    missing.
-    """
-    _recover_store(store_dir)
-    if batch_id is not None and is_replay(
+    for the first batch (empty store) and for backfills alike. HLL
+    union is idempotent but the ``n_events`` sum is not, so a replayed
+    batch is skipped (``publishing.fold_into_published``). Returns the
+    published version, or None for a skipped replay."""
+    return fold_into_published(
+        _day_sketches(batch),
         store_dir,
-        run_id,
-        batch_id,
-        "resume from the original checkpoint, or start a fresh "
-        "store_dir",
-    ):
-        return
-    incoming = _day_sketches(batch)
-    if os.path.isdir(store_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(store_dir)
-    ):
-        existing = spark.read.schema(SKETCH_SCHEMA).parquet(store_dir)
-        merged = (
-            existing.unionByName(incoming)
-            .groupBy("day")
-            .agg(
-                F.hll_union_agg("user_sketch").alias("user_sketch"),
-                F.sum("n_events").alias("n_events"),
-            )
-        )
-    else:
-        merged = incoming
-    swap_in_generation(merged, store_dir, run_id=run_id, batch_id=batch_id)
+        ["day"],
+        [
+            F.hll_union_agg("user_sketch").alias("user_sketch"),
+            F.sum("n_events").alias("n_events"),
+        ],
+        batch_id=batch_id,
+        run_id=run_id,
+    )
 
 
 def sketch_store_stream(
@@ -129,8 +86,7 @@ def estimate_distinct_users(
 ) -> tuple[DataFrame, DataFrame]:
     """Read the store and answer: distinct users per day, and the
     merged total across all days — no event data touched."""
-    _recover_store(store_dir)
-    store = spark.read.schema(SKETCH_SCHEMA).parquet(store_dir)
+    store = read_published(spark, store_dir)
     per_day = store.select(
         "day",
         F.hll_sketch_estimate("user_sketch").cast("long").alias("est_users"),

@@ -12,8 +12,8 @@ Design for 100 TB state:
   base side is read with a partition FILTER (bucket pruning at the
   parquet source) and rewritten with dynamic partition overwrite.
   Per-batch cost scales with touched-bucket volume, not state size.
-- No batch-id marker and no generation swap, unlike the sketch store
-  (streaming/sketches.py): latest-wins SCD-1 merge is IDEMPOTENT —
+- No batch-id marker and no versioned publish, unlike the sketch store
+  (streaming/publishing.py): latest-wins SCD-1 merge is IDEMPOTENT —
   replaying a batch merges the same updates to the same result, and a
   crash mid-overwrite (some buckets new, some old) heals on the
   at-least-once redelivery. Idempotent merge semantics buy crash

@@ -31,24 +31,19 @@ provenance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.embedding_gen import embed_texts
-from ..operators.similarity import IvfIndex, ivf_assign
-from .marker import (
-    is_replay,
-    last_batch_id,
-    read_batches,
-    start_available_now,
-    write_marker,
+from ..operators.similarity import (
+    IvfIndex,
+    build_ivf_index,
+    ivf_assign,
+    load_ivf_index,
 )
+from .marker import is_replay, start_available_now, write_marker
 
 SEED_BATCH_ID = -1
-
-
-def last_ingested_batch_id(index_dir: str) -> int | None:
-    return last_batch_id(index_dir)
 
 
 def seed_index(
@@ -61,40 +56,24 @@ def seed_index(
     text_col: str = "text",
 ) -> None:
     """Bootstrap: embed the existing corpus, fit the coarse quantizer
-    once, land centroids + generation ``batch_id=-1`` assignments."""
-    from ..operators.similarity import build_ivf_index
-
-    spark = docs.sparkSession
+    once, land centroids + generation ``batch_id=-1`` assignments
+    (re-seeding replaces every landed generation)."""
     emb = embed_texts(
         docs, embedder=embedder, id_col=id_col, text_col=text_col, dim=dim
     )
     index = build_ivf_index(
         emb, id_col=id_col, vec_col="embedding", n_clusters=n_clusters
     )
-    (
-        index.assignments.write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{index_dir}/assignments/batch_id={SEED_BATCH_ID}")
-    )
-    centroid_rows = [
-        (i, [float(x) for x in ctr]) for i, ctr in enumerate(index.centers)
-    ]
-    spark.createDataFrame(
-        centroid_rows, "cluster int, center array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    IvfIndex(
+        index.centers,
+        index.assignments.withColumn("batch_id", F.lit(SEED_BATCH_ID)),
+    ).write(index_dir)
 
 
-def load_vector_index(spark: SparkSession, index_dir: str) -> IvfIndex:
-    """The whole index — seed generation plus every ingested batch —
-    as one partitioned scan (batch_id, cluster are partition columns;
-    probes prune on cluster)."""
-    import numpy as np
-
-    rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    centers = np.array(
-        [r.center for r in sorted(rows, key=lambda r: r.cluster)]
-    )
-    return IvfIndex(centers, read_batches(spark, f"{index_dir}/assignments"))
+# the whole index — seed generation plus every ingested batch — is one
+# partitioned scan (batch_id, cluster are partition columns; probes
+# prune on cluster)
+load_vector_index = load_ivf_index
 
 
 def ingest_vector_batch(

@@ -1,19 +1,37 @@
-"""Contract tests for the shared run-scoped replay marker
-(``streaming/marker.py`` — ADVICE r7: atomic writes, empty-file
-tolerance, legacy single-line upgrade) and the interval-union leaked-
-token accounting (``decontam_gate.tokens_leaked``)."""
+"""Contract tests for the shared run-scoped replay guard
+(``streaming/marker.py``: atomic writes, empty-file tolerance, legacy
+single-line upgrade, and the one truth table every whole-store fold
+runs against its published metadata), the folds' failure atomicity,
+and the interval-union leaked-token accounting
+(``decontam_gate.tokens_leaked``)."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
+from etl_with_s3__dynamodb_and_glue_spark.sources.publish import (
+    current_version,
+    read_metadata,
+    read_published,
+)
+from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
+    estimate_counts,
+    merge_cms_batch,
+)
 from etl_with_s3__dynamodb_and_glue_spark.streaming.marker import (
     is_replay,
     marker_path,
     read_marker,
     write_marker,
+)
+from etl_with_s3__dynamodb_and_glue_spark.streaming.publishing import (
+    fold_and_publish,
+)
+from etl_with_s3__dynamodb_and_glue_spark.streaming.sketches import (
+    merge_day_sketches,
 )
 
 
@@ -127,118 +145,92 @@ def test_tokens_leaked_unions_overlapping_spans(spark):
     assert got == {1: (2, 10), 2: (2, 16), 3: (2, 12), 4: (3, 20)}
 
 
-def test_unscoped_backfill_swap_carries_the_marker_forward(spark, tmp_path):
-    """A manual backfill merge (batch_id=None) rewrites the store
-    through the same generation swap; it must NOT destroy the
-    stream's replay marker — a lost marker lets the next
-    at-least-once redelivery double-merge a non-idempotent sum (r8
-    review finding, fixed in genstore.swap_in_generation)."""
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
-        merge_cms_batch,
-    )
-
-    df = spark.createDataFrame([("a",), ("b",), ("a",)], "key string")
-    store = str(tmp_path / "store")
-    merge_cms_batch(spark, df, store, "key", batch_id=4, run_id="ckpt-A")
-    assert read_marker(store) == ("ckpt-A", 4)
-    before = {
-        (r.j, r.pos): r.n for r in spark.read.parquet(store).collect()
-    }
-    # unscoped backfill: merges, marker survives
-    merge_cms_batch(spark, df, store, "key")
-    assert read_marker(store) == ("ckpt-A", 4)
-    after = {(r.j, r.pos): r.n for r in spark.read.parquet(store).collect()}
-    assert after == {k: v * 2 for k, v in before.items()}
-    # and the stream's replay of batch 4 still short-circuits
-    merge_cms_batch(spark, df, store, "key", batch_id=4, run_id="ckpt-A")
-    assert {
-        (r.j, r.pos): r.n for r in spark.read.parquet(store).collect()
-    } == after
-
-
-def test_cms_store_crash_window_recovers(spark, tmp_path):
-    """Generation-swap crash windows (shared genstore helper): a crash
-    after the old generation was set aside but before promotion leaves
-    only <store>.old — the next reader/merger must heal it; a crash
-    after promotion leaves both — the leftover is dropped."""
-    import shutil
-
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
-        estimate_counts,
-        merge_cms_batch,
-    )
-
-    df = spark.createDataFrame([("a",), ("b",), ("a",)], "key string")
-    store = str(tmp_path / "store")
-    merge_cms_batch(spark, df, store, "key", batch_id=0, run_id="ckpt-A")
-    want = {
-        r.key: r.est_count
-        for r in estimate_counts(spark, store, df.distinct(), "key").collect()
-    }
-    assert want == {"a": 2, "b": 1}
-
-    # window 1: set-aside happened, promotion didn't
-    shutil.move(store, store + ".old")
-    got = {
-        r.key: r.est_count
-        for r in estimate_counts(spark, store, df.distinct(), "key").collect()
-    }
-    assert got == want and read_marker(store) == ("ckpt-A", 0)
-
-    # window 2: promotion happened, leftover .old remains
-    shutil.copytree(store, store + ".old")
-    merge_cms_batch(spark, df, store, "key", batch_id=1, run_id="ckpt-A")
-    assert not os.path.isdir(store + ".old")
-    assert {
-        r.key: r.est_count
-        for r in estimate_counts(spark, store, df.distinct(), "key").collect()
-    } == {"a": 4, "b": 2}
-
-
-def test_last_merged_batch_id_heals_crash_window(spark, tmp_path):
-    """The resume-decision accessor must see through the swap's crash
-    window: with only <store>.old on disk (crash between set-aside and
-    promotion), last_merged_batch_id heals first and reports the
-    landed id — returning None here would invite a renumbered re-seed
-    that the next merge rejects (review r8)."""
-    import shutil
-
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
-        last_merged_batch_id,
-        merge_cms_batch,
-    )
-
-    df = spark.createDataFrame([("a",), ("b",)], "key string")
-    store = str(tmp_path / "store")
-    merge_cms_batch(spark, df, store, "key", batch_id=3, run_id="ckpt-A")
-    shutil.move(store, store + ".old")
-    assert last_merged_batch_id(store) == 3
-    assert os.path.isdir(store) and not os.path.isdir(store + ".old")
-
-
 def _mk_events(spark, n=6):
-    from pyspark.sql import functions as F
-
+    """One frame every store can fold: ts + user_id (HLL), key (CMS),
+    ts + event_type + value (rollup)."""
     return spark.range(n).select(
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
+        (F.col("id") % 3).alias("user_id"),
+        (F.col("id") % 2).cast("string").alias("key"),
         F.lit("click").alias("event_type"),
         F.col("id").cast("double").alias("value"),
     )
+
+
+# store -> (fold(spark, batch, root, **guard), its additive count column)
+_FOLDS = {
+    "hll": (
+        lambda spark, batch, root, **kw: merge_day_sketches(
+            spark, batch, root, **kw
+        ),
+        "n_events",
+    ),
+    "cms": (
+        lambda spark, batch, root, **kw: merge_cms_batch(
+            spark, batch, root, "key", **kw
+        ),
+        "n",
+    ),
+    "rollup": (
+        lambda spark, batch, root, **kw: fold_and_publish(batch, root, **kw),
+        "n_events",
+    ),
+}
+
+
+def _total(spark, root, col):
+    return read_published(spark, root).agg(F.sum(col)).first()[0]
+
+
+@pytest.mark.parametrize("store", sorted(_FOLDS))
+def test_store_replay_truth_table(spark, tmp_path, store):
+    """Every whole-store fold runs ``marker.replays`` against the
+    (run_id, batch_id) in its published metadata: a legacy record
+    raises below the landed id and is adopted at it, a same-run replay
+    skips, a cross-run regression raises naming the resume hint, and an
+    unscoped backfill (batch_id=None) folds but carries the guard
+    forward — publishing without it would let the stream's next
+    redelivery double-fold a non-idempotent sum."""
+    fold, count_col = _FOLDS[store]
+    ev = _mk_events(spark)
+    root = str(tmp_path / store)
+    guard = {"last_batch_id": 5, "run_id": "ckpt-A"}
+
+    # legacy-shaped record: folded without a run id
+    assert fold(spark, ev, root, batch_id=5, run_id="") == 0
+    once = _total(spark, root, count_col)
+    assert once > 0
+    # legacy BELOW the landed id: a fresh checkpoint renumbering, loud,
+    # and the record stays legacy
+    with pytest.raises(ValueError, match="legacy unscoped"):
+        fold(spark, ev, root, batch_id=3, run_id="ckpt-B")
+    assert read_metadata(root) == {"last_batch_id": 5, "run_id": ""}
+    # legacy AT the landed id: skip and adopt the run
+    assert fold(spark, ev, root, batch_id=5, run_id="ckpt-A") is None
+    assert read_metadata(root) == guard
+    # same-run replay, at or below the landed id: skip
+    assert fold(spark, ev, root, batch_id=5, run_id="ckpt-A") is None
+    assert fold(spark, ev, root, batch_id=4, run_id="ckpt-A") is None
+    # cross-run regression: raises with the hint, store untouched
+    with pytest.raises(ValueError, match="different run.*fresh root"):
+        fold(spark, ev, root, batch_id=5, run_id="ckpt-B")
+    assert current_version(root) == 0
+    assert _total(spark, root, count_col) == once
+    # unscoped backfill: a new version, the guard carried forward
+    assert fold(spark, ev, root) == 1
+    assert read_metadata(root) == guard
+    assert _total(spark, root, count_col) == 2 * once
+    # the stream's redelivery still skips; progress lands
+    assert fold(spark, ev, root, batch_id=5, run_id="ckpt-A") is None
+    assert fold(spark, ev, root, batch_id=6, run_id="ckpt-A") == 2
+    assert read_metadata(root) == {"last_batch_id": 6, "run_id": "ckpt-A"}
 
 
 def test_fold_and_publish_unscoped_backfill_carries_marker(spark, tmp_path):
     """A manual backfill (batch_id=None) through the WAP publisher
     must carry the folded (run_id, batch_id) forward into the new
     snapshot's metadata — publishing {} would wipe the replay guard
-    and let the stream's next at-least-once redelivery double-fold
-    (review r8; genstore.swap_in_generation's rule, WAP edition)."""
-    from etl_with_s3__dynamodb_and_glue_spark.sources.publish import (
-        read_metadata,
-    )
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.publishing import (
-        fold_and_publish,
-    )
-
+    and let the stream's next at-least-once redelivery double-fold."""
     root = str(tmp_path / "rollup")
     ev = _mk_events(spark)
     assert fold_and_publish(ev, root, batch_id=0, run_id="ckpt-A") == 0
@@ -257,11 +249,7 @@ def test_fold_and_publish_legacy_skips_at_folded_id_raises_below(
     table: a new run's replay AT the folded id skips (the original
     checkpoint resuming after an upgrade), BELOW it raises — skipping
     would silently drop a fresh checkpoint's renumbered batches from
-    the published rollup (review r8)."""
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.publishing import (
-        fold_and_publish,
-    )
-
+    the published rollup."""
     ev = _mk_events(spark)
     # legacy replay BELOW the folded id raises (fresh checkpoint
     # renumbering from 0 — skipping would silently drop its batches)
@@ -274,10 +262,6 @@ def test_fold_and_publish_legacy_skips_at_folded_id_raises_below(
     # (metadata rewritten run-scoped, the marker.py contract): the
     # ambiguity resolves once — a THIRD run replaying at the folded
     # id now raises instead of silently dropping its data
-    from etl_with_s3__dynamodb_and_glue_spark.sources.publish import (
-        read_metadata,
-    )
-
     root = str(tmp_path / "rollup")
     fold_and_publish(ev, root, batch_id=5, run_id="")  # legacy-shaped
     assert fold_and_publish(ev, root, batch_id=5, run_id="ckpt-B") is None
@@ -287,42 +271,49 @@ def test_fold_and_publish_legacy_skips_at_folded_id_raises_below(
         fold_and_publish(ev, root, batch_id=5, run_id="ckpt-C")
 
 
-def test_swap_in_generation_cleans_temp_dir_on_write_failure(
-    spark, tmp_path
-):
-    """A failed generation write must not strand a store-sized
-    gen_store_* orphan beside the store (review r8): the swap removes
-    its temp dir on failure and leaves the existing store untouched."""
-    from pyspark.sql import functions as F
+def _listing(root):
+    return sorted((d, sorted(files)) for d, _, files in os.walk(root))
 
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
-        estimate_counts,
-        merge_cms_batch,
-    )
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.genstore import (
-        swap_in_generation,
-    )
 
-    df = spark.createDataFrame([("a",), ("b",)], "key string")
+def test_cms_store_crash_window_recovers(spark, tmp_path):
+    """A fold whose write fails is invisible: the published version,
+    its metadata marker and every estimate stay as they were; reading
+    the store writes nothing; and the next fold of the same batch id
+    lands (the failed attempt's staged version is overwritten)."""
+    ev = _mk_events(spark)
+    keys = ev.select("key").distinct()
     store = str(tmp_path / "store")
-    merge_cms_batch(spark, df, store, "key", batch_id=0, run_id="ckpt-A")
-    before = {
-        r.key: r.est_count
-        for r in estimate_counts(spark, store, df.distinct(), "key").collect()
-    }
+    merge_cms_batch(spark, ev, store, "key", batch_id=0, run_id="ckpt-A")
 
-    exploding = spark.range(2).select(
-        F.assert_true(F.col("id") < 1).alias("boom"), F.col("id")
+    def estimates():
+        before = _listing(store)
+        got = {
+            r.key: r.est_count
+            for r in estimate_counts(spark, store, keys, "key").collect()
+        }
+        assert _listing(store) == before
+        return got
+
+    want = estimates()
+    assert want == {"0": 3, "1": 3}
+
+    exploding = ev.withColumn(
+        "key",
+        F.when(F.col("value") < 3, F.col("key")).otherwise(
+            F.raise_error(F.lit("boom"))
+        ),
     )
-    with pytest.raises(Exception):
-        swap_in_generation(exploding, store, run_id="ckpt-A", batch_id=1)
+    with pytest.raises(Exception, match="boom"):
+        merge_cms_batch(
+            spark, exploding, store, "key", batch_id=1, run_id="ckpt-A"
+        )
+    assert current_version(store) == 0
+    assert read_metadata(store) == {"last_batch_id": 0, "run_id": "ckpt-A"}
+    assert estimates() == want
 
-    leftovers = [
-        p for p in os.listdir(tmp_path) if p.startswith("gen_store_")
-    ]
-    assert leftovers == [], leftovers
-    assert {
-        r.key: r.est_count
-        for r in estimate_counts(spark, store, df.distinct(), "key").collect()
-    } == before
-    assert read_marker(store) == ("ckpt-A", 0)
+    assert (
+        merge_cms_batch(spark, ev, store, "key", batch_id=1, run_id="ckpt-A")
+        == 1
+    )
+    assert read_metadata(store) == {"last_batch_id": 1, "run_id": "ckpt-A"}
+    assert estimates() == {"0": 6, "1": 6}

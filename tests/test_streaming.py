@@ -441,8 +441,10 @@ def test_near_dup_ingest_stream_matches_batch_composition(spark, tmp_path):
 def test_sketch_store_replay_and_crash_recovery(spark, tmp_path):
     """foreachBatch is at-least-once: a REPLAYED batch id must not
     merge twice (n_events would double — HLL union is idempotent, the
-    sum is not). And a crash between the swap's renames must leave a
-    recoverable store."""
+    sum is not). And a crash after a merge staged its version but
+    before the pointer swap must stay invisible to readers, with the
+    next merge landing over the orphaned version."""
+    import os
     import shutil
 
     from etl_with_s3__dynamodb_and_glue_spark.streaming.sketches import (
@@ -466,51 +468,17 @@ def test_sketch_store_replay_and_crash_recovery(spark, tmp_path):
         for r in estimate_distinct_users(spark, store)[0].collect()
     } == baseline
 
-    # crash window: old generation set aside, new never promoted
-    shutil.move(store, store + ".old")
-    per_day, _ = estimate_distinct_users(spark, store)  # recovers
+    # crash window: the next version was staged, never promoted
+    shutil.copytree(os.path.join(store, "v=0000"), os.path.join(store, "v=0001"))
+    per_day, _ = estimate_distinct_users(spark, store)
     assert {(r.day, r.n_events) for r in per_day.collect()} == baseline
 
     # a NEW batch id does merge (n_events doubles per day)
-    merge_day_sketches(spark, events, store, batch_id=1)
+    assert merge_day_sketches(spark, events, store, batch_id=1) == 1
     assert {
         (r.day, r.n_events)
         for r in estimate_distinct_users(spark, store)[0].collect()
     } == {(d, n * 2) for d, n in baseline}
-
-
-def test_sketch_store_cross_run_regression_fails_loudly(spark, tmp_path):
-    """Run-scoped marker (r8, same contract as the ingest gates): a
-    fresh checkpoint renumbering batches from 0 against a store
-    another run built must raise, not silently skip the merge; a
-    LEGACY single-line marker (pre run-scoping) is adopted by the
-    resuming run."""
-    import pytest
-
-    from etl_with_s3__dynamodb_and_glue_spark.streaming import marker
-    from etl_with_s3__dynamodb_and_glue_spark.streaming.sketches import (
-        estimate_distinct_users,
-        merge_day_sketches,
-    )
-
-    events = read_events(spark, SF_SMOKE).select("ts", "user_id")
-    store = str(tmp_path / "store")
-    merge_day_sketches(spark, events, store, batch_id=3, run_id="ckpt-A")
-    with pytest.raises(ValueError, match="different run"):
-        merge_day_sketches(spark, events, store, batch_id=0, run_id="ckpt-B")
-    # legacy upgrade: rewrite the marker as a pre-run-scoping one-liner
-    with open(marker.marker_path(store), "w") as f:
-        f.write("3")
-    baseline = {
-        (r.day, r.n_events)
-        for r in estimate_distinct_users(spark, store)[0].collect()
-    }
-    merge_day_sketches(spark, events, store, batch_id=3, run_id="ckpt-A")
-    assert {
-        (r.day, r.n_events)
-        for r in estimate_distinct_users(spark, store)[0].collect()
-    } == baseline
-    assert marker.read_marker(store) == ("ckpt-A", 3)
 
 
 def test_rollup_publish_stream_matches_batch_and_guards_replay(spark, tmp_path):
@@ -693,6 +661,9 @@ def test_cms_store_stream_matches_batch_cells_and_bounds(spark, tmp_path):
     import pytest
 
     from etl_with_s3__dynamodb_and_glue_spark.operators.cms import cms_build
+    from etl_with_s3__dynamodb_and_glue_spark.sources.publish import (
+        read_published,
+    )
     from etl_with_s3__dynamodb_and_glue_spark.streaming.cms_store import (
         cms_store_stream,
         estimate_counts,
@@ -716,8 +687,7 @@ def test_cms_store_stream_matches_batch_cells_and_bounds(spark, tmp_path):
     q.awaitTermination(120)
 
     got_cells = {
-        (r.j, r.pos): r.n
-        for r in spark.read.parquet(store).collect()
+        (r.j, r.pos): r.n for r in read_published(spark, store).collect()
     }
     want_cells = {
         (r.j, r.pos): r.n for r in cms_build(events, "key").collect()
@@ -746,7 +716,7 @@ def test_cms_store_stream_matches_batch_cells_and_bounds(spark, tmp_path):
     run_id = os.path.abspath(str(tmp_path / "ckpt"))
     merge_cms_batch(spark, events, store, "key", batch_id=0, run_id=run_id)
     assert {
-        (r.j, r.pos): r.n for r in spark.read.parquet(store).collect()
+        (r.j, r.pos): r.n for r in read_published(spark, store).collect()
     } == got_cells
     with pytest.raises(ValueError, match="different run"):
         merge_cms_batch(
