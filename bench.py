@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
@@ -134,6 +135,35 @@ def _run_canary(spark, qs, sf_dir: str) -> dict[str, float | None]:
         except Exception:  # noqa: BLE001 — canary must never sink the run
             out[name] = None
     return out
+
+
+def _environment(spark) -> dict:
+    """What this run actually ran on, under perfbench's field names, so a
+    flat core-count comparison can be told apart from an ignored
+    ``SPARK_GRAFT_CPUS``, and a session the engine did not build (which
+    keeps Spark's 100-class codegen cache) from one it did."""
+    sc = spark.sparkContext
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        sha = None
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        "spark_version": spark.version,
+        "git_sha": sha,
+        "codegen_cache_max_entries": spark.conf.get(
+            "spark.sql.codegen.cache.maxEntries"
+        ),
+    }
 
 
 def main() -> None:
@@ -399,6 +429,7 @@ def main() -> None:
             **extra_timings,
         },
         **({"errors": errors} if errors else {}),
+        "env": _environment(spark),
         "metric": "headline_total_wall_clock",
         "value": total,
         "unit": "sec",

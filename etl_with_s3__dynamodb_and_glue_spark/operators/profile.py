@@ -3,15 +3,16 @@ data-quality report every ingest pipeline runs before promoting a
 drop (null rates, cardinalities, ranges).
 
 One ``df.agg`` computes every statistic for every profiled column in
-a single scan with map-side partial aggregation; the wide one-row
+a single scan with map-side partial aggregation (exact distinct counts
+excepted, see the scale note); the wide one-row
 result is then unpivoted into the long (column, stats) report — the
 unpivot touches k×5 scalars of an already-aggregated row, never data.
 
-Scale note: ``countDistinct`` over k columns in one aggregate makes
-Catalyst EXPAND the input k-fold (one duplicate stream per
-distinct-agg). Exact mode is therefore for oracle-scale checks;
-``exact=False`` swaps in ``approx_count_distinct`` (HLL partials, no
-expand, one true scan) — the 100 TB default, identical report schema.
+Scale note: exact distinct counts group the input by one grouping set
+per column, which EXPANDs it k-fold in a second scan. Exact mode is
+therefore for oracle-scale checks; ``exact=False`` swaps in
+``approx_count_distinct`` (HLL partials, no expand, one true scan) —
+the 100 TB default, identical report schema.
 
 Numeric ranges land in typed ``min_num``/``max_num`` and string
 ranges in ``min_str``/``max_str`` — stringifying floats into one
@@ -30,6 +31,21 @@ def _is_numeric(dtype: str) -> bool:
     return dtype.split("(")[0] in _NUMERIC
 
 
+def _distinct_counts(df: DataFrame, cols: list[str]) -> DataFrame:
+    """One row: ``_nd_<c>``, the exact count of distinct non-null values
+    of each column, with ``countDistinct``'s semantics (grouping keys
+    treat NaN as one value and -0.0 as 0.0).
+
+    A grouping set per column, in the caller's column order: in set i
+    every other column is NULL, so ``count(c)`` over the groups counts
+    only set i's non-null keys. A ``countDistinct`` per column in one
+    aggregate would plan the same expand, but Spark orders its groups by
+    a hash of expression ids, so the plan and its generated code changed
+    from one build to the next and every run recompiled."""
+    groups = df.groupingSets([[c] for c in cols], *cols).count()
+    return groups.agg(*[F.count(c).alias(f"_nd_{c}") for c in cols])
+
+
 def profile_table(
     df: DataFrame, columns: list[str] | None = None, exact: bool = True
 ) -> DataFrame:
@@ -43,12 +59,12 @@ def profile_table(
         base = dtypes[c].split("(")[0]
         if base not in _NUMERIC and base not in {"string", "date", "timestamp", "timestamp_ntz", "boolean"}:
             raise ValueError(f"profile_table: unsupported column type {c}: {dtypes[c]}")
-    distinct_fn = F.countDistinct if exact else F.approx_count_distinct
 
     aggs: list[Column] = [F.count(F.lit(1)).alias("_n_rows")]
     for c in cols:
         aggs.append(F.sum(F.isnull(c).cast("long")).alias(f"_nulls_{c}"))
-        aggs.append(distinct_fn(c).cast("long").alias(f"_nd_{c}"))
+        if not exact:
+            aggs.append(F.approx_count_distinct(c).cast("long").alias(f"_nd_{c}"))
         if _is_numeric(dtypes[c]):
             aggs.append(F.min(c).cast("double").alias(f"_min_{c}"))
             aggs.append(F.max(c).cast("double").alias(f"_max_{c}"))
@@ -56,6 +72,8 @@ def profile_table(
             aggs.append(F.min(F.col(c).cast("string")).alias(f"_min_{c}"))
             aggs.append(F.max(F.col(c).cast("string")).alias(f"_max_{c}"))
     wide = df.agg(*aggs)
+    if exact:
+        wide = wide.crossJoin(_distinct_counts(df, cols))
 
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")

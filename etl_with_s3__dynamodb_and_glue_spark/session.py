@@ -11,6 +11,11 @@ correctness-at-scale first:
   cluster this is overridden (or left to AQE's coalescing with a high
   initial partition number).
 - Arrow enabled for the pandas_udf slow path.
+- a whole-stage codegen class cache that holds the registry's working
+  set. Spark's default keeps 100 compiled classes, fewer than one warm
+  LLM-curation batch generates (about 105), so every such batch
+  recompiled most of them; one pass over the whole registry at sf0.001
+  generates about 2,000 distinct classes. See ``CODEGEN_CACHE_ENTRIES``.
 """
 
 from __future__ import annotations
@@ -18,6 +23,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries: about twice the ~2,000 distinct
+# classes one full-registry pass generates at sf0.001 (2,012-2,029
+# counted from CodegenMetrics), so a session that repeats registry plans
+# reuses their compiled classes instead of evicting them. Holding a
+# registry pass's classes took ~15 MB more Metaspace, so a full cache
+# costs a few tens of MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -31,6 +44,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, falling back
     to all cores) so the bench harness contract holds; on a cluster the
     caller passes the real master or relies on spark-submit.
+
+    Static confs (``spark.driver.memory``, the codegen cache size) take
+    effect only when this call launches the JVM. A session built
+    elsewhere, such as a driver's vanilla one, keeps Spark's defaults,
+    so its codegen cache holds 100 classes.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -48,6 +66,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.driver.memory", driver_mem)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

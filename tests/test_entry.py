@@ -48,6 +48,24 @@ def test_bench_headline_names_are_declared():
     assert not missing, missing
 
 
+def test_bench_env_records_the_session(spark):
+    """bench.py's env block reports the session the run actually used,
+    including the codegen cache size a session built elsewhere lacks."""
+    import os
+
+    import bench
+    from etl_with_s3__dynamodb_and_glue_spark.session import CODEGEN_CACHE_ENTRIES
+
+    env = bench._environment(spark)
+    assert env["master"] == spark.sparkContext.master
+    assert env["default_parallelism"] == spark.sparkContext.defaultParallelism
+    assert env["shuffle_partitions"] == spark.conf.get("spark.sql.shuffle.partitions")
+    assert env["spark_graft_cpus"] == os.environ.get("SPARK_GRAFT_CPUS")
+    assert env["spark_version"] == spark.version
+    assert env["git_sha"] is None or len(env["git_sha"]) == 40
+    assert env["codegen_cache_max_entries"] == str(CODEGEN_CACHE_ENTRIES)
+
+
 def test_sql_surface_matches_dataframe_plan(spark):
     """register_star_views exposes the SQL half of the API: the same
     query written in SQL equals its DataFrame twin (and events.ts is

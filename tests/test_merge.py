@@ -152,6 +152,44 @@ def test_profile_approx_mode_avoids_expand(spark):
     assert "Expand" not in plan_str(profile_table(df, exact=False))
 
 
+def test_profile_exact_distinct_keeps_count_distinct_semantics(spark):
+    """Exact distinct counts treat NaN as one value, -0.0 as 0.0 and skip
+    NULL, as ``countDistinct`` does."""
+    from pyspark.sql import functions as F
+
+    from etl_with_s3__dynamodb_and_glue_spark.operators.profile import (
+        profile_table,
+    )
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(nan, "a"), (nan, "a"), (-0.0, None), (0.0, "b"), (None, "b"), (1.0, "c")],
+        "v double, s string",
+    )
+    got = {r.col_name: r.n_distinct for r in profile_table(df).collect()}
+    want = df.agg(F.countDistinct("v"), F.countDistinct("s")).first()
+    assert got == {"v": want[0], "s": want[1]} == {"v": 3, "s": 3}
+
+
+def test_profile_exact_plan_is_independent_of_expression_ids(spark):
+    """The exact profile's optimized plan must not depend on how many
+    expression ids the session allocated before it; a plan that moves
+    from build to build recompiles its generated code on every run."""
+    import __spark_entry__ as entry_mod
+    from tests.conftest import SF_SMOKE
+    from tools.plan_fingerprints import normalize
+
+    qs = entry_mod.queries()
+
+    def plan() -> str:
+        df = qs["orders_profile"](spark, SF_SMOKE)
+        return normalize(df._jdf.queryExecution().optimizedPlan().toString())
+
+    first = plan()
+    qs["pricing_summary"](spark, SF_SMOKE)  # allocates expression ids
+    assert plan() == first
+
+
 # --- snapshot diff + SCD2 -------------------------------------------------
 
 

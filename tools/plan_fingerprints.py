@@ -19,10 +19,7 @@ A hash or ops change fails the check, as does ``py4j_calls`` growing by
 more than ``max(PY4J_SLACK_MIN, PY4J_SLACK * recorded)``; a drop passes
 with a note to regenerate. The hashes depend on the CPU count (17 of 153
 differ between 2 and 4 CPUs), hence the pinned settings in ``_meta``.
-Queries run in name order in one process, and ``orders_profile``'s hash
-also moves when the queries before it allocate a different number of
-expression ids: Spark orders its distinct-aggregate groups by a hash of
-those ids.
+Queries run in name order in one process.
 
 Usage: python tools/plan_fingerprints.py           # check
        python tools/plan_fingerprints.py --write   # regenerate the file
