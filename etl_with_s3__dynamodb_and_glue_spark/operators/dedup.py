@@ -275,11 +275,12 @@ def minhash_near_dups(
     on the candidates only (candidates ≪ all pairs — that's the LSH
     win). Returns (id_a, id_b, jaccard ≥ threshold).
 
-    The token-set intermediate is persisted (MEMORY_AND_DISK): it
-    feeds both the signature aggregation and both sides of the verify
-    join, and without caching Spark re-derives the whole tokenize
-    lineage per consumer — measured 5× slower at sf0.1. The cache is
-    released automatically when the returned DataFrame is dropped
+    The collapsed token-set groups (below) are persisted
+    (MEMORY_AND_DISK): they feed the signature aggregation, both sides
+    of the verify join and the within-group expansion, and without
+    caching Spark re-derives the whole tokenize lineage per consumer —
+    measured 5× slower at sf0.1. The cache is released automatically
+    when the returned DataFrame is dropped
     (``caching.unpersist_on_release``), so repeated dedup passes in
     one session don't accumulate storage.
 
@@ -323,21 +324,28 @@ def minhash_near_dups(
     standard pipeline order — Lee et al. 2022 run exact dedup ahead
     of near-dedup for the same reason): docs with identical token
     sets share one representative through signatures, banding, and
-    verify, and the final pairs are expanded back through the
-    group-membership table. Identical-set groups are pathological
-    for LSH — every member collides with every other in EVERY band,
-    so a group of d docs costs C(d,2) verifies for pairs that are
-    Jaccard 1 by construction, and two near-dup groups of sizes
-    d₁,d₂ cost d₁·d₂ verifies for ONE representative comparison.
-    Expansion is two joins on 16-byte pair rows plus a per-group
-    self-join for the within-group (Jaccard = 1) pairs — output is
-    row-identical to the uncollapsed construction (exceptAll parity
-    0 both ways at sf0.1/t=0.95). Interleaved fresh-session A/B at
-    sf0.1, t=0.95, 21% of docs exact-dups: steady-state ~5.4 s →
-    ~3.5 s, first-run 13.1 s → 10.7 s. The win grows with dup
-    density (web crawls routinely exceed 30% exact dups); on a
-    corpus with no exact dups the overhead is one row-local
-    fingerprint projection and a window over singleton groups.
+    verify. Identical-set groups are pathological for LSH — every
+    member collides with every other in EVERY band, so a group of d
+    docs costs C(d,2) verifies for pairs that are Jaccard 1 by
+    construction, and two near-dup groups of sizes d₁,d₂ cost d₁·d₂
+    verifies for ONE representative comparison (measured against no
+    collapse at sf0.1, t=0.95, 21% of docs exact-dups: steady-state
+    ~5.4 s → ~3.5 s; the win grows with dup density, and web crawls
+    routinely exceed 30% exact dups). The collapse is one
+    ``groupBy`` on the sorted set's fingerprint, persisted once:
+    ``(fp, rep = min(id), members = collect_list(id), toks = the
+    sorted set)``. Signatures are computed from it, the verify join
+    attaches each rep's hashed set together with its member list, a
+    verified rep pair expands by exploding ``m_a × m_b``, and the
+    within-group (Jaccard = 1) pairs come from each member array —
+    no window, no member table and no expansion join, because each of
+    those costs a Spark job whose driver-side scheduling gap outweighs
+    its executor work at corpus sizes like the perfbench one (a window
+    and four expansion joins made a warm 1,000-doc run at ``local[2]``
+    19 jobs; this shape runs 9). Output is row-identical to the
+    uncollapsed construction (tested against it on the smoke corpus).
+    On a corpus with no exact dups the overhead is one fingerprint
+    aggregation over singleton groups.
     """
     if bands is None:
         bands = pick_bands(num_hashes, threshold)
@@ -350,25 +358,23 @@ def minhash_near_dups(
     # saves. (The same helper IS a measured win where the heavy work
     # sits directly on the scan with no shuffle in between — see
     # importance.dsir_log_weights and build_minhash_store's layout.)
-    toks = token_sets(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-    # exact-duplicate collapse: one representative (min id) per
-    # identical token SET. The fingerprint must be order-insensitive
-    # (sets, not documents), hence the sort before hashing. The window
-    # partitions by fingerprint — group sizes are bounded by the dup
+    # exact-duplicate collapse: ONE aggregation on the token-set
+    # fingerprint yields each group's representative (min id), its
+    # member ids and its set. The fingerprint must be order-insensitive
+    # (sets, not documents), hence the sort before hashing; carrying
+    # the SORTED array makes the kept set the same whichever member's
+    # row the aggregate sees first. Group sizes are bounded by the dup
     # multiplicity, never corpus-sized.
-    members = (
-        toks.selectExpr(
-            f"`{id_col}`",
-            "md5(to_json(array_sort(toks))) AS fp",
-        )
-        .selectExpr(
-            f"`{id_col}`",
-            f"min(`{id_col}`) OVER (PARTITION BY fp) AS rep",
+    groups = (
+        token_sets(df, text_col, id_col)
+        .selectExpr(f"`{id_col}`", "array_sort(toks) AS toks")
+        .groupBy(F.expr("md5(to_json(toks)) AS fp"))
+        .agg(
+            F.expr(f"min(`{id_col}`) AS rep"),
+            F.expr(f"collect_list(`{id_col}`) AS members"),
+            F.expr("first(toks) AS toks"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rep_toks = toks.join(
-        members.filter(F.col(id_col) == F.col("rep")).select(id_col), id_col
     )
     # include_set_size: the set size rides the signature aggregation
     # itself (same groupBy, zero extra shuffle or join).
@@ -384,7 +390,7 @@ def minhash_near_dups(
     # t=0.9, 2.79 → 2.12 s (1.31×) at t=0.95. Released with the other
     # intermediates via unpersist_on_release.
     sigs = minhash_signatures(
-        rep_toks.withColumnRenamed("toks", "shingles"),
+        groups.selectExpr(f"rep AS `{id_col}`", "toks AS shingles"),
         id_col=id_col,
         shingle_col="shingles",
         num_hashes=num_hashes,
@@ -419,25 +425,31 @@ def minhash_near_dups(
         .distinct()
     )
 
-    a = rep_toks.selectExpr(
-        f"`{id_col}` AS id_a", "transform(toks, t -> xxhash64(t)) AS toks_a"
+    # each rep's hashed set rides with its member list, so the verified
+    # pair expands without another join
+    a = groups.selectExpr(
+        "rep AS id_a",
+        "transform(toks, t -> xxhash64(t)) AS toks_a",
+        "members AS m_a",
     )
-    b = rep_toks.selectExpr(
-        f"`{id_col}` AS id_b", "transform(toks, t -> xxhash64(t)) AS toks_b"
+    b = groups.selectExpr(
+        "rep AS id_b",
+        "transform(toks, t -> xxhash64(t)) AS toks_b",
+        "members AS m_b",
     )
     rep_pairs = (
         candidates.join(a, "id_a")
         .join(b, "id_b")
         .selectExpr(
-            "id_a",
-            "id_b",
+            "m_a",
+            "m_b",
             "size(array_intersect(toks_a, toks_b)) AS n_inter",
             "n_set_a AS n_a",
             "n_set_b AS n_b",
         )
         .selectExpr(
-            "id_a",
-            "id_b",
+            "m_a",
+            "m_b",
             "round(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 6)"
             " AS jaccard",
         )
@@ -447,30 +459,24 @@ def minhash_near_dups(
     # J(x, y) for x∈A, y∈B equals J(rep_A, rep_B) because members
     # share their rep's token set verbatim. Within-group: every member
     # pair of one group is Jaccard exactly 1 (≥ any threshold ≤ 1).
-    ma = members.select(F.col("rep").alias("id_a"), F.col(id_col).alias("_da"))
-    mb = members.select(F.col("rep").alias("id_b"), F.col(id_col).alias("_db"))
     cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_da", "_db").alias("id_a"),
-            F.greatest("_da", "_db").alias("id_b"),
-            "jaccard",
+        rep_pairs.selectExpr("explode(m_a) AS _da", "m_b", "jaccard")
+        .selectExpr("_da", "explode(m_b) AS _db", "jaccard")
+        .selectExpr(
+            "least(_da, _db) AS id_a", "greatest(_da, _db) AS id_b", "jaccard"
         )
     )
-    wa = members.select("rep", F.col(id_col).alias("_da"))
-    wb = members.select("rep", F.col(id_col).alias("_db"))
     within = (
-        wa.join(wb, "rep")
-        .filter(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("id_a"),
-            F.col("_db").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
+        groups.filter("size(members) > 1")
+        .selectExpr("members", "explode(members) AS _da")
+        .selectExpr(
+            "_da AS id_a",
+            "explode(filter(members, m -> m > _da)) AS id_b",
+            "1.0D AS jaccard",
         )
     )
     verified = cross.union(within)
-    return unpersist_on_release(verified, toks, members, sigs)
+    return unpersist_on_release(verified, groups, sigs)
 
 
 def minhash_near_dups_incremental(

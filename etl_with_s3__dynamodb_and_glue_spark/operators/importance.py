@@ -51,6 +51,7 @@ is the declared end-to-end query).
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .classifier import _hex4
@@ -67,10 +68,35 @@ def gram_bucket(gram: Column, buckets: int = B_BUCKETS) -> Column:
     )
 
 
-# per-process memo of the unigram++bigram feature expression keyed by
-# text column name — expression metadata only (see the note at the
-# use site in hashed_feature_counts)
-_FEATURE_EXPR_MEMO: dict = {}
+class _JvmScopedMemo:
+    """Memo of values bound to one JVM, such as classic Columns: each
+    holds a py4j handle into the gateway that built it, and that handle
+    is dead once the gateway is shut down. Entries made under an
+    earlier gateway are dropped at the first lookup under a new one, so
+    a session restarted in the same process rebuilds them. A restart
+    that keeps the JVM keeps them."""
+
+    def __init__(self) -> None:
+        self._gateway = None
+        self._entries: dict = {}
+
+    def get(self, key):
+        if self._gateway is not SparkContext._gateway:
+            self.clear()
+        return self._entries.get(key)
+
+    def put(self, key, value) -> None:
+        self._entries[key] = value
+
+    def clear(self) -> None:
+        self._entries.clear()
+        self._gateway = SparkContext._gateway
+
+
+# the unigram++bigram feature expression keyed by text column name —
+# expression metadata only (see the note at the use site in
+# hashed_feature_counts)
+_FEATURE_EXPR_MEMO = _JvmScopedMemo()
 
 
 def hashed_feature_counts(
@@ -96,13 +122,12 @@ def hashed_feature_counts(
     # build (≈0.3-0.5 s of driver time per query construction on the
     # bench host). Column objects are immutable unresolved expression
     # trees, safely shared across DataFrames/queries; this caches the
-    # EXPRESSION, never data.
-    key = text_col
-    feats = _FEATURE_EXPR_MEMO.get(key)
+    # EXPRESSION, never data, and only for the JVM that built it.
+    feats = _FEATURE_EXPR_MEMO.get(text_col)
     if feats is None:
         toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
         feats = F.concat(toks, word_ngrams(toks, 2))
-        _FEATURE_EXPR_MEMO[key] = feats
+        _FEATURE_EXPR_MEMO.put(text_col, feats)
     # Split-adaptive repartition (r13 opt round, operators/gates.py):
     # the unigram+bigram explode and per-gram md5 sit DIRECTLY on the
     # corpus scan with no shuffle in between, so a one-file input runs

@@ -2198,7 +2198,7 @@ def doc_split_leakage_audit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     verified = dedup.minhash_near_dups(docs, threshold=_LEAKAGE_THRESHOLD)
     pairs = verified.select("id_a", "id_b")
-    # lazy composition — keep the token-set/member caches alive until
+    # lazy composition — keep the group/signature caches alive until
     # the caller's action (ADVICE r9 pattern)
     return carry_cache_deps(_leakage_cells(docs, pairs), verified)
 

@@ -16,6 +16,12 @@ correctness-at-scale first:
   LLM-curation batch generates (about 105), so every such batch
   recompiled most of them; one pass over the whole registry at sf0.001
   generates about 2,000 distinct classes. See ``CODEGEN_CACHE_ENTRIES``.
+- generated class names without the codegen stage number
+  (``spark.sql.codegen.useIdInClassName=false``). AQE numbers
+  whole-stage codegen stages in the order it plans query stages, which
+  follows whichever concurrent stage finishes first, so one plan
+  yields differently numbered, otherwise identical classes from run to
+  run, and each numbering missed the class cache.
 """
 
 from __future__ import annotations
@@ -67,6 +73,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

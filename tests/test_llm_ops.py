@@ -257,8 +257,10 @@ def test_minhash_exact_dup_collapse_expands_completely(spark):
     """The exact-duplicate collapse must be output-invisible: every
     within-group pair (Jaccard 1), every cross-group member pair, and
     no pair involving the unrelated doc. Constructed case: group A =
-    {1,2,3} identical, group B = {10, 11} identical and near-identical
-    to A, doc 20 unrelated."""
+    {1,2,3,4,5} with one token SET (4 and 5 differ from 1 in order,
+    case, spacing and repeats), group B = {10, 11} identical and
+    near-identical to A, group C = {30, 31, 32} another set written
+    three ways, doc 20 unrelated."""
     a_text = "alpha beta gamma delta epsilon zeta eta theta"
     b_text = a_text + " extra"  # high-overlap near-dup of A
     df = spark.createDataFrame(
@@ -266,22 +268,68 @@ def test_minhash_exact_dup_collapse_expands_completely(spark):
             (1, a_text),
             (2, a_text),
             (3, a_text),
+            (4, "Theta ETA zeta  epsilon delta gamma beta alpha alpha"),
+            (5, " ALPHA beta\tgamma delta epsilon zeta eta theta THETA "),
             (10, b_text),
             (11, b_text),
             (20, "totally different words nothing shared here at all"),
+            (30, "alpha beta gamma"),
+            (31, "Beta alpha  ALPHA gamma"),
+            (32, "gamma GAMMA gamma beta alpha"),
         ],
         "doc_id long, text string",
     )
     rows = dedup.minhash_near_dups(df, threshold=0.8).collect()
     got = {(r.id_a, r.id_b): r.jaccard for r in rows}
-    within_a = {(1, 2), (1, 3), (2, 3)}
+    group_a = [1, 2, 3, 4, 5]
+    within_a = {(x, y) for x in group_a for y in group_a if x < y}
     within_b = {(10, 11)}
-    cross = {(1, 10), (1, 11), (2, 10), (2, 11), (3, 10), (3, 11)}
-    assert set(got) == within_a | within_b | cross
-    for p in within_a | within_b:
+    within_c = {(30, 31), (30, 32), (31, 32)}
+    cross = {(x, y) for x in group_a for y in (10, 11)}
+    assert set(got) == within_a | within_b | within_c | cross
+    for p in within_a | within_b | within_c:
         assert got[p] == 1.0
     # J(A, B) = 8/9 for every cross pair — identical across members
     assert {round(got[p], 6) for p in cross} == {round(8 / 9, 6)}
+
+
+def test_minhash_collapse_matches_uncollapsed_reference(docs):
+    """The collapsed operator returns exactly the pairs of the plain
+    MinHash pipeline run over EVERY doc: signatures, banded candidates,
+    exact Jaccard verify. Exact duplicates share a signature, so they
+    collide in every band and verify at 1.0; a member of one group
+    pairs with a member of another exactly when their sets do. A
+    within-group or cross-group pair lost in the expansion shows up on
+    one side of the difference."""
+    threshold, num_hashes = 0.95, 64
+    bands = dedup.pick_bands(num_hashes, threshold)
+    toks = dedup.token_sets(docs)
+    sigs = dedup.minhash_signatures(
+        toks.withColumnRenamed("toks", "shingles"), num_hashes=num_hashes
+    )
+    cands = dedup.lsh_candidate_pairs(sigs, num_hashes=num_hashes, bands=bands)
+    a = toks.selectExpr("doc_id AS id_a", "toks AS toks_a")
+    b = toks.selectExpr("doc_id AS id_b", "toks AS toks_b")
+    reference = (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "round(CAST(size(array_intersect(toks_a, toks_b)) AS DOUBLE)"
+            " / size(array_union(toks_a, toks_b)), 6) AS jaccard",
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+    collapsed = dedup.minhash_near_dups(
+        docs, threshold=threshold, num_hashes=num_hashes
+    )
+    missing = reference.exceptAll(collapsed).collect()
+    extra = collapsed.exceptAll(reference).collect()
+    assert not missing and not extra, (missing[:5], extra[:5])
+    ref_rows = reference.collect()
+    # the smoke corpus must exercise the collapse: exact-dup pairs exist
+    assert any(r.jaccard == 1.0 for r in ref_rows) and len(ref_rows) > 10
 
 
 def test_incremental_minhash_recall_and_precision_vs_exact_cross(docs, spark):
@@ -1724,6 +1772,72 @@ def test_scan_parallelism_gate_branches_give_identical_counts(spark, monkeypatch
     kept, rows_kept = run()
     assert repartitioned and not kept
     assert rows_kept == rows and rows
+
+
+_GATEWAY_RESTART_SCRIPT = """
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+
+from etl_with_s3__dynamodb_and_glue_spark import get_spark
+from etl_with_s3__dynamodb_and_glue_spark.operators import importance
+
+
+def bucket_rows():
+    spark = get_spark("memo-restart", master="local[1]", shuffle_partitions=1)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma delta")], "doc_id long, text string"
+    )
+    rows = sorted(map(tuple, importance.hashed_feature_counts(docs).collect()))
+    return spark, rows
+
+
+spark, first = bucket_rows()
+# stop Spark and the JVM behind it, keeping the Python process
+gateway = SparkContext._gateway
+spark.stop()
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait(timeout=60)
+SparkContext._gateway = None
+SparkContext._jvm = None
+spark, second = bucket_rows()
+assert first and second == first, (first, second)
+spark.stop()
+print("SAME")
+"""
+
+
+def test_feature_expr_memo_survives_gateway_restart(tmp_path):
+    """The memoized feature Column holds a handle into the JVM that
+    built it. After Spark and its JVM restart in the same process, the
+    memo must rebuild it, not hand the dead handle to the new session."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    proc = subprocess.run(
+        [sys.executable, "-c", _GATEWAY_RESTART_SCRIPT, str(root)],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0 and "SAME" in proc.stdout, proc.stderr[-3000:]
+
+
+def test_feature_expr_memo_clear_empties_it(spark):
+    from etl_with_s3__dynamodb_and_glue_spark.operators import importance
+
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    importance.hashed_feature_counts(docs)
+    assert importance._FEATURE_EXPR_MEMO.get("text") is not None
+    importance._FEATURE_EXPR_MEMO.clear()
+    assert importance._FEATURE_EXPR_MEMO.get("text") is None
 
 
 def test_dsir_weights_separate_target_language(spark):
